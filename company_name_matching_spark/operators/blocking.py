@@ -31,6 +31,29 @@ skew, ``utils/validation.py:216``):
 
 With b bands × r rows the LSH match-probability curve has threshold
 ≈ (1/b)^(1/r); defaults b=4, r=3 → ~0.63 trigram-Jaccard.
+
+Plan shape. The MinHash expressions are higher-order functions, which run
+interpreted, so the optimizer's treatment of them decides the cost of
+blocking. Three Catalyst rules matter, and :func:`generate_blocks` and
+:func:`explode_staged` are written around them:
+
+* ``CollapseProject`` keeps a projection whose expensive alias is referenced
+  more than once by the projection above it. Staging trigram hashes, then
+  the signature, then the band keys in three projections therefore computes
+  each once per row: the signature reads the hash array bands·rows times,
+  the band keys read the signature bands·rows times.
+* Lambda variables defeat common-subexpression elimination. Every
+  ``F.transform`` copy gets fresh lambda variables, so copies of an inline
+  trigram scan are never semantically equal. Written as one expression,
+  the band keys' bands·rows signature references times the signature's
+  bands·rows permutations put 144 trigram scans (at the default 4×3) into
+  each row's evaluation.
+* ``InferFiltersFromGenerate`` adds ``size(input) > 0 AND isnotnull(input)``
+  below an inner ``explode``, and predicate pushdown then inlines the
+  staged input's whole expression into that filter, so staging an array in
+  its own projection does not stop it from being computed twice.
+  :func:`explode_staged` uses ``explode_outer`` (the rule skips outer
+  generators) and drops the NULL rows above the generator.
 """
 
 from __future__ import annotations
@@ -103,12 +126,13 @@ def trigram_hashes_col(col):
 
 def sig_from_hashes_col(hashes_col, cfg: BlockingConfig):
     """array<bigint> MinHash signature from an ALREADY-COMPUTED trigram-hash
-    array column. Interpreted projections get no common-subexpression
-    elimination, so referencing an inline trigram-scan expression from all
-    bands·rows permutations recomputes the substring+xxhash scan that many
-    times per row — long-document callers must stage/materialize the hash
-    array first and build the signature from the stored column (each
-    permutation pass is then pure arithmetic over the in-memory array)."""
+    array column. ``hashes_col`` must be a column of a projection below
+    (or a stored column), never the inline :func:`trigram_hashes_col`
+    expression: the bands·rows permutations each reference it, and the
+    copies are not common subexpressions (see the module docstring), so the
+    substring+xxhash scan would run that many times per row, for short
+    company names as much as for long documents. Over a staged array each
+    permutation pass is pure arithmetic."""
     return F.array(
         *[
             F.array_min(
@@ -165,23 +189,13 @@ def sig_arrow_kernel(cfg: BlockingConfig):
     return _sig
 
 
-def minhash_signature_col(col, cfg: BlockingConfig):
-    """array<bigint> MinHash signature of length bands*rows (JVM-native).
-
-    Single-expression form — fine for SHORT strings (company names, ~30
-    chars): the repeated trigram scan is cheap there. For long documents
-    use :func:`sig_from_hashes_col` over a materialized hash array (see
-    its docstring; ~2× on the sf0.1 documents signature stage)."""
-    return sig_from_hashes_col(trigram_hashes_col(col), cfg)
-
-
 def band_keys_from_sig(sig, cfg: BlockingConfig):
     """array<string> of LSH band keys from an already-computed signature
-    column. Deriving bands from a *materialized* signature matters for long
-    strings: the signature expression tree is large, and when codegen falls
-    back to interpreted mode there is no common-subexpression elimination —
-    referencing it once per band would recompute the whole shingle scan
-    bands× (observed 600+ s on 500 long documents before this split)."""
+    column (staged in a projection below, or stored). The band keys
+    reference the signature bands·rows times, and an inline signature
+    expression gets no common-subexpression elimination in interpreted
+    mode — it would recompute the whole shingle scan that many times per
+    row (observed 600+ s on 500 long documents before this split)."""
     keys = []
     for band in range(cfg.minhash_bands):
         lo = band * cfg.minhash_rows
@@ -194,13 +208,6 @@ def band_keys_from_sig(sig, cfg: BlockingConfig):
             )
         )
     return F.array(*keys)
-
-
-def band_keys_col(col, cfg: BlockingConfig):
-    """array<string> of LSH band block keys (single-expression form — fine
-    for short strings like match keys; for long documents stage the
-    signature first and use band_keys_from_sig)."""
-    return band_keys_from_sig(minhash_signature_col(col, cfg), cfg)
 
 
 def prefix_key_col(tokens_col, cfg: BlockingConfig):
@@ -257,8 +264,9 @@ def generate_blocks(
     ``passthrough`` columns ride along unchanged (e.g. a per-key weight for
     the contracted key-domain path in :func:`candidate_pairs`).
 
-    Only records with non-empty ``match_key`` participate. Both channels are
-    computed in the same narrow map stage; ``explode`` fans out the LSH keys.
+    Only records with non-empty ``match_key`` participate. All channels are
+    computed in the same narrow map stage, the LSH keys over three staged
+    projections; :func:`explode_staged` fans the key array out.
     """
     cfg = cfg or BlockingConfig()
     unknown = set(cfg.channels) - {"prefix", "lsh", "token", "phonetic"}
@@ -270,26 +278,51 @@ def generate_blocks(
             f"unknown blocking channels {sorted(unknown)}; "
             "valid: 'prefix', 'lsh', 'token', 'phonetic' (need at least one)"
         )
+    ids = ["record_id", *passthrough]
+    df = names
+    if "lsh" in cfg.channels:
+        # one projection per MinHash step, so each runs once per row (see
+        # the module docstring): trigram hashes → signature → band keys
+        carry = ids + (["tokens"] if set(cfg.channels) - {"lsh"} else [])
+        df = df.select(
+            *carry, trigram_hashes_col(F.col("match_key")).alias("_th")
+        ).select(*carry, sig_from_hashes_col(F.col("_th"), cfg).alias("_sig"))
     key_arrays = []
     if "prefix" in cfg.channels:
         key_arrays.append(F.array(prefix_key_col(F.col("tokens"), cfg)))
     if "lsh" in cfg.channels:
-        key_arrays.append(band_keys_col(F.col("match_key"), cfg))
+        key_arrays.append(band_keys_from_sig(F.col("_sig"), cfg))
     if "token" in cfg.channels:
         key_arrays.append(token_keys_col(F.col("tokens")))
     if "phonetic" in cfg.channels:
         key_arrays.append(F.array(phonetic_key_col(F.col("tokens"), cfg)))
     all_keys = F.concat(*key_arrays) if len(key_arrays) > 1 else key_arrays[0]
-    # stage the key array in its own projection before explode: Generate
-    # re-evaluates its generator expression per OUTPUT row, which would
-    # recompute the MinHash signature keys× per record (~1.6× measured)
-    staged = names.select("record_id", *passthrough, all_keys.alias("_keys"))
     # no dedup shuffle here: (record_id, block_key) duplicates are impossible
     # by construction — channels are namespace-disjoint ("p:" / "l:{band}:" /
     # "t:"), band keys carry distinct band indices, and token keys are
     # array_distinct. Downstream consumers that form pairs dedup pairs anyway.
-    return staged.select(
-        "record_id", *passthrough, F.explode("_keys").alias("block_key")
+    # Every key is non-NULL by construction, as explode_staged requires.
+    return explode_staged(
+        df.select(*ids, all_keys.alias("_keys")), "_keys", "block_key", *ids
+    )
+
+
+def explode_staged(
+    staged: DataFrame, keys: str, out: str, *keep: str
+) -> DataFrame:
+    """One row per element of the array column ``keys`` of ``staged``,
+    named ``out``, next to the ``keep`` columns.
+
+    For a ``keys`` column that the projection below computes with an
+    expensive expression. A plain ``explode`` would run that expression
+    twice per row: ``InferFiltersFromGenerate`` adds ``size(keys) > 0``
+    below the generator and pushdown inlines the staged expression into
+    that filter (module docstring). ``explode_outer`` gets no inferred
+    filter. Its NULL rows, for NULL or empty arrays, are dropped above the
+    generator, so the rows equal ``explode``'s whenever no element is
+    NULL — callers must build arrays of non-NULL elements."""
+    return staged.select(*keep, F.explode_outer(keys).alias(out)).where(
+        F.col(out).isNotNull()
     )
 
 

@@ -740,8 +740,9 @@ def embedding_neardup_pairs_lsh(
     )
 
     tables = md5_hyperplanes(dim, n_planes, n_tables)
-    # stage the bucket-key array in its own projection BEFORE explode
-    # (generators re-evaluate their expression per OUTPUT row)
+    # stage the bucket-key array in its own projection before the explode
+    # (see the blocking module docstring for why the staging and
+    # explode_staged are both needed)
     keyed = vecs.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
@@ -757,7 +758,7 @@ def embedding_neardup_pairs_lsh(
     # degenerate case the expectation bound ignores (e.g. zero vectors all
     # landing in one all-ones sign bucket → O(n²) on that bucket).
     b = materialize(
-        keyed.select("id", "v", F.explode("_keys").alias("bucket")),
+        blocking.explode_staged(keyed, "_keys", "bucket", "id", "v"),
         "emb_lsh_buckets",
     )
     b = _cap_buckets(b, "bucket", max_bucket_size)

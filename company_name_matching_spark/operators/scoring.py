@@ -521,7 +521,16 @@ def score_pairs(
         F.col("key_id").alias("r_key_id"),
         *[F.col(c).alias(f"rh_{c}") for c in _kf_cols],
     )
-    k = ukp.join(l_kf, "l_key_id").join(r_kf, "r_key_id")
+    k = ukp
+    if need_vectors:
+        # AQE coalesces the small distinct key-pair exchange into one
+        # partition, which would run the pair UDF in one task; it never
+        # coalesces a repartition by number. Spreading the id pairs before
+        # the feature joins shuffles two longs a row, not the vectors.
+        k = k.repartition(
+            int(names.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        )
+    k = k.join(l_kf, "l_key_id").join(r_kf, "r_key_id")
 
     inter = F.size(F.array_intersect("lh_tokens", "rh_tokens"))
     union = F.size(F.array_union("lh_tokens", "rh_tokens"))

@@ -226,10 +226,8 @@ def search_topk(
                         for t in range(cfg.dense_tables)
                     ]
                 ).alias("_keys"),
-            )  # stage the key array before explode (generator re-evaluation)
-            return keyed.select(
-                "record_id", F.explode("_keys").alias("bucket")
-            )
+            )  # staged before the explode: see the blocking module docstring
+            return blocking.explode_staged(keyed, "_keys", "bucket", "record_id")
 
         dense_cand = (
             _buckets(qv).withColumnRenamed("record_id", "left_id")

@@ -187,6 +187,8 @@ class TestPipelineFrontStage:
             by_c = {}
             for r in rows:
                 by_c.setdefault(r.cluster_id, set()).add(r.record_id)
-            return sorted(frozenset(v) for v in by_c.values())
+            # sorted lists, not frozensets: set '<' is a partial order, so
+            # sorting frozensets depends on the collect order
+            return sorted(sorted(v) for v in by_c.values())
 
         assert cluster_sets(with_text) == cluster_sets(raw)

@@ -131,9 +131,14 @@ def test_minhash_deterministic(spark):
         [("a", "tnhh son ha viet"), ("b", "tnhh son ha viet")], "record_id string, match_key string"
     ).withColumn("tokens", F.split("match_key", " "))
     cfg = blocking.BlockingConfig()
-    sig = df.select(
-        "record_id", blocking.minhash_signature_col(F.col("match_key"), cfg).alias("sig")
-    ).collect()
+    sig = (
+        df.select(
+            "record_id",
+            blocking.trigram_hashes_col(F.col("match_key")).alias("th"),
+        )
+        .select("record_id", blocking.sig_from_hashes_col(F.col("th"), cfg).alias("sig"))
+        .collect()
+    )
     assert sig[0]["sig"] == sig[1]["sig"]
     assert len(sig[0]["sig"]) == cfg.minhash_bands * cfg.minhash_rows
 
