@@ -505,7 +505,7 @@ def docs_winnow_neardup(spark, sf_dir):
     output provably equals the quadratic join over fingerprint sets, which
     is exactly what the DuckDB oracle computes. hash="md5" pins the
     DuckDB-reproducible gram hash (the production default is the faster
-    xxhash64 path — VERDICT r5 #2)."""
+    Arrow rolling-hash kernel)."""
     from company_name_matching_spark.operators import dedup
 
     d = _t(spark, sf_dir, "documents")

@@ -109,33 +109,19 @@ def canon_text(text: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
 
 
-def winnow_gram_hashes(canon: Column, k: int = 8,
-                       hash: str = "md5") -> Column:
-    """Rolling k-gram hashes of an ALREADY-STAGED canonical text column.
-
-    Two hash paths (the fingerprint SEMANTICS only need a deterministic
-    hash; the choice is an oracle-vs-throughput trade, VERDICT r5 #2):
-
-    * ``"md5"`` — 60-bit md5 top-15-hex, DuckDB-reproducible (the oracle
-      entries replay it in SQL); a heavy per-position constant.
-    * ``"xxhash64"`` — Spark's JVM codegen'd 64-bit xxhash64, the
-      production default for the non-oracle near-dup channels (~one
-      8-byte hash per position instead of md5+hex+conv).
+def winnow_gram_hashes(canon: Column, k: int = 8) -> Column:
+    """Rolling k-gram hashes of an ALREADY-STAGED canonical text column:
+    60-bit md5 top-15-hex per gram, DuckDB-reproducible (the oracle
+    entries replay it in SQL).
 
     ``canon`` must be a bound column, not an inline expression:
     higher-order lambdas re-evaluate every non-lambda subexpression per
     element (no CSE), so an inline regexp canonicalization would run once
     per gram."""
-    if hash not in ("md5", "xxhash64"):
-        raise ValueError(f"unknown winnow gram hash {hash!r}")
-    if hash == "xxhash64":
-        def gram_hash(i):
-            return F.xxhash64(canon.substr(i, F.lit(k)))
-    else:
-        def gram_hash(i):
-            return F.conv(
-                F.substring(F.md5(canon.substr(i, F.lit(k))), 1, 15), 16, 10
-            ).cast("long")
+    def gram_hash(i):
+        return F.conv(
+            F.substring(F.md5(canon.substr(i, F.lit(k))), 1, 15), 16, 10
+        ).cast("long")
     n_grams = F.greatest(F.length(canon) - F.lit(k - 1), F.lit(1))
     # empty canonical text ⇒ EMPTY hash set (the floor of one gram would
     # hash the empty string, making all blank docs near-duplicates of each
@@ -245,15 +231,18 @@ def winnow_fingerprint_table(docs, id_col: str = "doc_id",
     fp array<long>); ``extra_cols`` (e.g. a blocking column) ride through
     the stages.
 
-    ``hash`` engines: ``"md5"`` (DuckDB-oracle-reproducible),
-    ``"xxhash64"`` (JVM HOFs, no Python), ``"arrow"`` (vectorized numpy
+    ``hash`` engines: ``"md5"`` (DuckDB-oracle-reproducible JVM HOFs,
+    :func:`winnow_gram_hashes`) and ``"arrow"`` (vectorized numpy
     rolling-hash kernel, :func:`_winnow_arrow_udf` — fastest; fuses
-    gram-hash + selection into one Arrow batch). All three produce valid
+    gram-hash + selection into one Arrow batch). Both produce valid
     Schleimer'03 selections with identical structure; fingerprint VALUES
     differ per engine, so every doc in one near-dup comparison must use
-    one engine (pair-set-equality pytest covers all three).
+    one engine (pair-set-equality pytest covers both).
     """
     from company_name_matching_spark.sources.store import materialize
+
+    if hash not in ("md5", "arrow"):
+        raise ValueError(f"unknown winnow gram hash {hash!r}")
 
     canon = canon_text(F.col(text_col))
     # small parquet inputs arrive as one split; spread the CPU-bound
@@ -277,7 +266,7 @@ def winnow_fingerprint_table(docs, id_col: str = "doc_id",
     s2 = materialize(
         s1.select(
             id_col, *extra_cols,
-            winnow_gram_hashes(F.col("_ct"), k, hash).alias("_gh"),
+            winnow_gram_hashes(F.col("_ct"), k).alias("_gh"),
         ),
         "winnow_hashes",
     )

@@ -320,7 +320,8 @@ def explode_staged(
     that filter (module docstring). ``explode_outer`` gets no inferred
     filter. Its NULL rows, for NULL or empty arrays, are dropped above the
     generator, so the rows equal ``explode``'s whenever no element is
-    NULL — callers must build arrays of non-NULL elements."""
+    NULL — callers must build arrays of non-NULL elements, or want NULL
+    elements dropped."""
     return staged.select(*keep, F.explode_outer(keys).alias(out)).where(
         F.col(out).isNotNull()
     )

@@ -397,7 +397,7 @@ def _winnow_items(
     k: int,
     w: int,
     block_col: str | None,
-    hash: str = "xxhash64",
+    hash: str,
 ) -> DataFrame:
     """(id, items, n, bk) winnowing-fingerprint frame shared by the winnow
     channels — one copy of the fp-table projection + no-block convention."""
@@ -440,9 +440,8 @@ def winnow_pairs(
     candidate ids.
 
     ``hash`` defaults to the vectorized ``"arrow"`` rolling-hash kernel
-    (fastest measured engine — BENCH.md round-5: best-of 7.0 s vs 10.1
-    xxhash64 vs 18.5 md5 on a 50k-doc corpus); ``"xxhash64"`` is the
-    JVM-only alternative, and the oracle entries pass ``"md5"`` so DuckDB
+    (fastest measured engine — BENCH.md round-5: best-of 7.0 s vs 18.5
+    md5 on a 50k-doc corpus); the oracle entries pass ``"md5"`` so DuckDB
     can replay the fingerprints exactly (the selection SEMANTICS are
     hash-agnostic — see ``textstats.winnow_fingerprint_table``).
     """
@@ -459,29 +458,17 @@ def minhash_pairs(
     text_col: str = "text",
     cfg: blocking.BlockingConfig | None = None,
     threshold: float = 0.7,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """MinHash-LSH near-dup candidates, verified by true shingle Jaccard.
 
     Reuses the signature machinery from the blocking stage over the
     canonicalized document text; candidate pairs from band buckets are
-    re-checked with exact char-trigram-set Jaccard.
-
-    ``kernel`` picks the signature engine — the two are BIT-IDENTICAL
-    (same JVM trigram hashes in, same universal-hash integer arithmetic;
-    see :func:`blocking.sig_arrow_kernel`), so the choice changes wall
-    time only, never the pair set:
-
-    * ``"arrow"`` (default) — trigram hashes stay JVM codegen'd, the
-      bands·rows permutation minima run vectorized in numpy over one
-      Arrow batch, and the two scratch barriers fuse into one (the
-      staged hash-array table existed only to keep the interpreted HOF
-      permutation passes from re-scanning the text).
-    * ``"jvm"`` — the round-4 pure-JVM two-barrier shape (no Python
-      workers at all), kept for Python-worker-less deployments.
+    re-checked with exact char-trigram-set Jaccard. The signatures come
+    from :func:`blocking.sig_arrow_kernel`: trigram hashes stay JVM
+    codegen'd and the bands·rows permutation minima run vectorized in
+    numpy over one Arrow batch (bit-identical to the JVM form
+    :func:`blocking.sig_from_hashes_col` that ``generate_blocks`` uses).
     """
-    if kernel not in ("arrow", "jvm"):
-        raise ValueError(f"unknown minhash kernel {kernel!r}")
     cfg = cfg or blocking.BlockingConfig(minhash_bands=8, minhash_rows=4)
     canon = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
     d = docs.select(F.col(id_col).alias("id"), canon.alias("ctext"))
@@ -494,41 +481,20 @@ def minhash_pairs(
 
     # parquet barrier, not localCheckpoint: executor-memory-resident blocks
     # are non-replayable on executor loss on a real cluster (and the
-    # in-memory scan anti-scales at high local thread counts; see store.py)
-    if kernel == "arrow":
-        # fused: the JVM computes the trigram-hash array once (a single
-        # expression feeding the UDF — evaluated once, codegen'd), the
-        # Arrow kernel derives all bands·rows permutation minima in numpy.
-        # No intermediate hash-array barrier needed: the staged table
-        # existed only because interpreted HOF permutation passes get no
-        # CSE and would re-scan the text per permutation.
-        sigs = materialize(
-            d.select(
-                "id",
-                blocking.sig_arrow_kernel(cfg)(
-                    blocking.trigram_hashes_col(F.col("ctext"))
-                ).alias("sig"),
-            ),
-            "minhash_sigs",
-        )
-    else:
-        # two-step: trigram-hash the documents ONCE, then derive the 32
-        # permutation minima from the stored array — the inline form
-        # recomputes the substring+xxhash scan per permutation (no CSE in
-        # interpreted projections; measured ~2× on this stage at sf0.1)
-        th = materialize(
-            d.select(
-                "id", blocking.trigram_hashes_col(F.col("ctext")).alias("th")
-            ),
-            "minhash_tghash",
-        )
-        sigs = materialize(
-            th.select(
-                "id",
-                blocking.sig_from_hashes_col(F.col("th"), cfg).alias("sig"),
-            ),
-            "minhash_sigs",
-        )
+    # in-memory scan anti-scales at high local thread counts; see store.py).
+    # The JVM computes the trigram-hash array once (one codegen'd expression
+    # feeding the UDF) and the Arrow kernel derives all bands·rows
+    # permutation minima from it in numpy, so no staged hash-array barrier
+    # is needed.
+    sigs = materialize(
+        d.select(
+            "id",
+            blocking.sig_arrow_kernel(cfg)(
+                blocking.trigram_hashes_col(F.col("ctext"))
+            ).alias("sig"),
+        ),
+        "minhash_sigs",
+    )
     bands = sigs.select(
         F.col("id").alias("record_id"),
         F.explode(blocking.band_keys_from_sig(F.col("sig"), cfg)).alias("block_key"),

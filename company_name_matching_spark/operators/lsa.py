@@ -33,6 +33,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from company_name_matching_spark.operators import blocking
+
 
 @dataclass(frozen=True)
 class LsaModel:
@@ -43,7 +45,9 @@ class LsaModel:
 
 
 def _gram_counts(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(id, gram, tf) — distinct char n-grams with term frequency."""
+    """(id, gram, tf) — distinct char n-grams with term frequency. A NULL
+    text stages the gram array ``[NULL]``; its NULL gram is dropped, so
+    such a document contributes no grams."""
     col = F.lower(F.col(text_col))
     n_grams = F.greatest(F.length(col) - F.lit(n - 1), F.lit(1))
     grams = F.transform(
@@ -51,7 +55,7 @@ def _gram_counts(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame
     )
     staged = df.select(F.col(id_col).alias("_id"), grams.alias("_grams"))
     return (
-        staged.select("_id", F.explode("_grams").alias("gram"))
+        blocking.explode_staged(staged, "_grams", "gram", "_id")
         .groupBy("_id", "gram")
         .agg(F.count(F.lit(1)).alias("tf"))
     )

@@ -103,32 +103,20 @@ def validate_mentions(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _with_norm(df: DataFrame, text_col: str, kernel: str) -> DataFrame:
-    """Attach the ``_norm`` struct via the chosen kernel.
+def normalize_mentions(
+    df: DataFrame, id_col: str, text_col: str, keep_cols: tuple[str, ...] = (),
+    id_domain: str = "",
+) -> DataFrame:
+    """Generic mention normalization: any (id, text) table → normalized
+    records with all scoring-side features. One shuffle-free map.
 
-    ``kernel="pandas"`` (DEFAULT) is the vectorized Arrow kernel —
-    measured FASTER than the JVM alternative and kept by measurement,
-    not assumption. ``"auto"`` routes rows inside the provably
-    byte-identical safe charset (``vnnorm_jvm.SAFE_TEXT_PATTERN``)
-    through the JVM regexp chain (zero Python workers) and the rest
-    through the pandas kernel, then unions; ``"jvm"`` applies the JVM
-    chain unconditionally (caller asserts safe-charset input).
-
-    Why pandas wins (interleaved fresh-JVM A/B, 217k pages,
-    ``bench_normalize_kernel.json``): best-of-2 normalize-stage 12.1 s
-    pandas vs 18.5 s auto at local[8]; 8.9 vs 30.8 at local[32]. The
-    ~120-rule chain nested as one Column expression exceeds janino's
-    64 KB method limit, so Spark falls back to INTERPRETED evaluation —
-    a per-row tree walk with a UTF8String→String→UTF8String
-    materialization per regexp_replace, which costs far more than one
-    Arrow round-trip into the vectorized kernel (and degrades further
-    at 32 threads where the extra allocations saturate the memory
-    bus). The JVM twin stays available as an executable spec (its
-    differential suite hardens the kernel) and for pure-SQL
-    deployments that cannot run Python workers at all."""
-    from company_name_matching_spark.functions import vnnorm_jvm
-
-    col = F.col(text_col)
+    CONTRACT: ``id_col`` must be unique within ``df`` — ``record_id`` is its
+    hash, and a duplicated id fans out every downstream per-record join
+    (the batch pipeline treats the url AS the page identity; the streaming
+    path enforces uniqueness with its anti-join). When two normalized
+    tables from DIFFERENT id spaces are unioned (e.g. search's corpus ∪
+    queries), give each a distinct ``id_domain`` — it is hashed with the id
+    so a corpus id that happens to equal a query id cannot collide."""
     # asNondeterministic (guide §4.4): downstream filters on UDF-derived
     # columns (``match_key != ""``, entry-level predicates) get pushed below
     # the projection by DUPLICATING the UDF — the normalize plan carried
@@ -138,79 +126,9 @@ def _with_norm(df: DataFrame, text_col: str, kernel: str) -> DataFrame:
     # the kernel is a pure function of the text, so results are unchanged —
     # only the duplication disappears (plan now shows exactly one
     # ArrowEvalPython; differential tests unchanged).
-    norm_udf = _normalize_udf.asNondeterministic()
-    if kernel == "pandas":
-        return df.withColumn("_norm", norm_udf(col))
-    if kernel == "jvm":
-        return df.withColumn("_norm", vnnorm_jvm.normalized_struct(col))
-    safe = vnnorm_jvm.is_jvm_safe(col)
-    jvm = df.where(safe).withColumn(
-        "_norm", vnnorm_jvm.normalized_struct(col)
+    df = validate_mentions(df, text_col).withColumn(
+        "_norm", _normalize_udf.asNondeterministic()(F.col(text_col))
     )
-    arrow = df.where(~safe).withColumn("_norm", norm_udf(col))
-    return jvm.unionByName(arrow)
-
-
-def normalize_mentions(
-    df: DataFrame, id_col: str, text_col: str, keep_cols: tuple[str, ...] = (),
-    id_domain: str = "",
-    dedup_normalize: str = "never",
-    kernel: str = "pandas",
-) -> DataFrame:
-    """Generic mention normalization: any (id, text) table → normalized
-    records with all scoring-side features. One shuffle-free map (or a
-    distinct-text contraction when duplication pays for it — below).
-
-    CONTRACT: ``id_col`` must be unique within ``df`` — ``record_id`` is its
-    hash, and a duplicated id fans out every downstream per-record join
-    (the batch pipeline treats the url AS the page identity; the streaming
-    path enforces uniqueness with its anti-join). When two normalized
-    tables from DIFFERENT id spaces are unioned (e.g. search's corpus ∪
-    queries), give each a distinct ``id_domain`` — it is hashed with the id
-    so a corpus id that happens to equal a query id cannot collide.
-
-    ``dedup_normalize``: web corpora repeat the same mention text across
-    millions of pages, and the 53-rule Arrow kernel is the pipeline's
-    single hottest per-row cost — so ``"always"`` runs the kernel once
-    per DISTINCT text and joins the results back (the same row-domain
-    contraction the scoring stage applies to featurization and CCNet
-    applies to LID/LM scoring; output is bit-identical because the
-    kernel is a pure function of the text). ``"auto"`` spends one cheap
-    count/approx-distinct aggregation and contracts when duplication
-    ≥ 2×. ``"never"`` (DEFAULT) keeps the shuffle-free per-row map —
-    measured A/B on the 162,888-page / 24×-duplicated bench workload at
-    local[8] (interleaved best-of-2, fresh JVMs): per-row 7.4 s vs
-    contraction 11.0 s, because the distinct() shuffle of the text
-    column costs more than the vectorized kernel saves on short
-    mention strings. The contraction pays only when per-row kernel
-    cost ≫ shuffle cost per row (long documents, or kernels far
-    heavier than this one) — that regime is exactly CCNet's
-    dedup-before-LM ordering, which plans/webcorpus.py applies at the
-    document level instead."""
-    if dedup_normalize not in ("auto", "always", "never"):
-        raise ValueError(
-            f"dedup_normalize must be 'auto', 'always' or 'never', "
-            f"got {dedup_normalize!r}"
-        )
-    if kernel not in ("auto", "pandas", "jvm"):
-        raise ValueError(
-            f"kernel must be 'auto', 'pandas' or 'jvm', got {kernel!r}"
-        )
-    df = validate_mentions(df, text_col)
-    contract = dedup_normalize == "always"
-    if dedup_normalize == "auto":
-        stats = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct(text_col).alias("d"),
-        ).first()
-        contract = stats["n"] >= 2 * max(int(stats["d"]), 1)
-    if contract:
-        normed = _with_norm(
-            df.select(F.col(text_col).alias("_t")).distinct(), "_t", kernel
-        )
-        df = df.join(normed, df[text_col] == normed["_t"]).drop("_t")
-    else:
-        df = _with_norm(df, text_col, kernel)
     rid = (
         F.xxhash64(F.concat(F.lit(id_domain), F.col(id_col).cast("string")))
         if id_domain
@@ -238,14 +156,11 @@ def normalize_mentions(
     return df
 
 
-def normalize_pages(
-    pages: DataFrame, text_col: str = "text", dedup_normalize: str = "never",
-    kernel: str = "pandas",
-) -> DataFrame:
+def normalize_pages(pages: DataFrame, text_col: str = "text") -> DataFrame:
     """pages → names with all scoring-side features (url is the identity)."""
-    return normalize_mentions(
-        pages, "url", text_col, dedup_normalize=dedup_normalize, kernel=kernel
-    ).withColumnRenamed("source_id", "url")
+    return normalize_mentions(pages, "url", text_col).withColumnRenamed(
+        "source_id", "url"
+    )
 
 
 def group_original_names(

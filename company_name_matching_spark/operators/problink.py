@@ -214,10 +214,13 @@ def estimate_u(
     df = names.select(
         F.col(order_col).alias("_ord"), "match_key", "tokens"
     )
+    n = None
     if sample_fraction is None:
         n_in = df.count()
         if n_in > AUTO_SAMPLE_THRESHOLD:
             sample_fraction = AUTO_SAMPLE_TARGET / n_in
+        else:
+            n = n_in  # no filter below: the ranked frame has n_in rows
     if sample_fraction is not None:
         if not (0.0 < sample_fraction <= 1.0):
             raise ValueError(f"sample_fraction must be in (0,1], got {sample_fraction}")
@@ -231,7 +234,8 @@ def estimate_u(
     rn = df.withColumn(
         "_rn", F.row_number().over(Window.orderBy("_ord")) - 1
     )
-    n = rn.count()
+    if n is None:
+        n = rn.count()
     if n < 2:
         raise ValueError(f"need ≥ 2 records to estimate u, got {n}")
     k = min(k, n - 1)

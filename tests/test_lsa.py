@@ -104,3 +104,18 @@ def test_subspace_matches_dense_svd(dense, fitted):
     E_sp = np.stack([emb[pid] for pid in ids])
     G_sp = E_sp @ E_sp.T
     np.testing.assert_allclose(G_sp, G_np, atol=1e-8)
+
+
+def test_gram_scan_runs_once_and_null_text_adds_no_gram(spark):
+    """The staged gram array is exploded without an inferred Filter that
+    recomputes the ``sequence(`` scan, and a NULL text yields no gram —
+    a NULL vocabulary slot could never join a document."""
+    from tests.test_staged_explode import assert_staged_explodes
+
+    df = spark.createDataFrame(
+        [(1, "vinamilk"), (2, "vina milk"), (3, None)], "id long, text string"
+    )
+    gc = lsa._gram_counts(df, "id", "text", 3)
+    assert_staged_explodes(gc, scan_once="sequence(")
+    model = lsa.fit(df, "id", "text", n_components=2, vocab_size=512)
+    assert None not in model.vocab

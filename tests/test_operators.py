@@ -563,12 +563,13 @@ def test_winnow_fingerprints_match_reference_impl(spark):
 
 
 def test_winnow_xxhash64_path_structural_parity(spark):
-    """The fast production gram hash (hash="xxhash64", VERDICT r5 #2) must
-    drive the SAME selection structure as the oracle md5 path: applying
-    the python Schleimer'03 window-min selection to the engine-produced
-    xxhash64 gram arrays reproduces the full pipeline's fingerprints, the
-    shared-substring guarantee holds, and the near-dup PAIRS found on a
-    separated corpus agree with the md5 path."""
+    """The staged HOF engine (hash="md5": gram-hash array, then
+    ``winnow_select_mins``) drives the Schleimer'03 selection exactly:
+    applying the python window-min selection to the engine-produced md5
+    gram arrays reproduces the full pipeline's fingerprints, the
+    shared-substring guarantee holds, a blank doc selects nothing, the
+    near-dup PAIRS found on a separated corpus agree with the Arrow
+    default, and any other hash (``"xxhash64"``) is rejected."""
     from pyspark.sql import functions as F
 
     from company_name_matching_spark.functions import textstats
@@ -585,13 +586,13 @@ def test_winnow_xxhash64_path_structural_parity(spark):
         [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
     )
     w = 4
-    # engine gram hashes (staged canon, xxhash64 per k-gram)
+    # engine gram hashes (staged canon, md5 per k-gram)
     grams = {
         r["doc_id"]: list(r["gh"])
         for r in df.select(
             "doc_id",
             textstats.winnow_gram_hashes(
-                textstats.canon_text(F.col("text")), 8, "xxhash64"
+                textstats.canon_text(F.col("text")), 8
             ).alias("gh"),
         ).collect()
     }
@@ -604,8 +605,7 @@ def test_winnow_xxhash64_path_structural_parity(spark):
 
     got = {
         r["doc_id"]: list(r["fp"])
-        for r in textstats.winnow_fingerprint_table(
-            df, hash="xxhash64").collect()
+        for r in textstats.winnow_fingerprint_table(df, hash="md5").collect()
     }
     for i in range(len(texts)):
         assert got[i] == py_select(grams[i]), i
@@ -616,14 +616,14 @@ def test_winnow_xxhash64_path_structural_parity(spark):
     md5_pairs = {(r["left_id"], r["right_id"])
                  for r in dedup.winnow_pairs(
                      df, threshold=0.5, hash="md5").collect()}
-    xx_pairs = {(r["left_id"], r["right_id"])
-                for r in dedup.winnow_pairs(df, threshold=0.5).collect()}
-    assert md5_pairs == xx_pairs == {(0, 1)}
+    arrow_pairs = {(r["left_id"], r["right_id"])
+                   for r in dedup.winnow_pairs(df, threshold=0.5).collect()}
+    assert md5_pairs == arrow_pairs == {(0, 1)}
     # unknown hash fails loudly
     import pytest
 
     with pytest.raises(ValueError, match="winnow gram hash"):
-        textstats.winnow_gram_hashes(F.col("text"), 8, "sha1")
+        textstats.winnow_fingerprint_table(df, hash="xxhash64")
 
 
 def test_winnow_arrow_kernel_parity(spark):
@@ -632,7 +632,7 @@ def test_winnow_arrow_kernel_parity(spark):
     implementation of the same uint64 Horner rolling hash + Schleimer'03
     selection, replicate every HOF-engine edge semantic (blank → empty,
     null → empty, len<k → one truncated gram, whitespace canon), and find
-    the identical near-dup pair set as the other engines."""
+    the identical near-dup pair set as the md5 engine."""
     import re
 
     from company_name_matching_spark.functions import textstats
@@ -686,13 +686,13 @@ def test_winnow_arrow_kernel_parity(spark):
     assert got[6] == [] and got[7] == []
     assert set(got[0]) & set(got[1])          # shared-substring guarantee
     assert not set(got[0]) & set(got[2])
-    # all three engines find the identical pair set
+    # both engines find the identical pair set
     psets = {
         h: {(r["left_id"], r["right_id"])
             for r in dedup.winnow_pairs(df, threshold=0.5, hash=h).collect()}
-        for h in ("md5", "xxhash64", "arrow")
+        for h in ("md5", "arrow")
     }
-    assert psets["md5"] == psets["xxhash64"] == psets["arrow"] == {(0, 1)}
+    assert psets["md5"] == psets["arrow"] == {(0, 1)}
 
 
 def test_repetition_signals_hand_values(spark):
@@ -827,27 +827,3 @@ def test_unknown_channel_raises(spark):
         blocking.generate_blocks(
             names, blocking.BlockingConfig(channels=("prefix", "fonetic"))
         )
-
-
-def test_dedup_normalize_paths_identical(spark):
-    """The distinct-text contraction ('always') is bit-identical to the
-    per-row kernel ('never') — the kernel is a pure function of the text,
-    so only the plan changes. 'auto' picks contraction on this duplicated
-    corpus and must also match. (Default is 'never': the A/B in the
-    operator docstring measured the distinct shuffle costlier than the
-    kernel on short mention strings.)"""
-    pages = fixtures.pages_dataframe(spark, n_companies=20, per_company=3,
-                                     upsample=4)
-    outs = {}
-    for mode in ("never", "always", "auto"):
-        outs[mode] = sorted(
-            map(tuple, normalize.normalize_pages(pages, dedup_normalize=mode)
-                .select("record_id", "url", "name", "cleaned", "norm_key",
-                        "match_key", "entity_type", "has_repeat")
-                .collect())
-        )
-    assert outs["never"] == outs["always"] == outs["auto"]
-    import pytest
-
-    with pytest.raises(ValueError, match="dedup_normalize"):
-        normalize.normalize_pages(pages, dedup_normalize="sometimes")

@@ -18,21 +18,24 @@ from hypothesis import strategies as st
 
 from company_name_matching_spark.functions import vnnorm
 
+_HAVE_REFERENCE = os.path.isdir("/root/reference/src")
+
 pytestmark = pytest.mark.skipif(
-    not os.path.isdir("/root/reference/src"), reason="reference repo not present"
+    not _HAVE_REFERENCE, reason="reference repo not present"
 )
 
-sys.path.insert(0, "/root/reference")
-try:
-    from src.preprocess import (  # type: ignore  # noqa: E402
-        clean_company_name,
-        normalize_entity_types,
-        normalize_functional_terms,
-        normalize_vietnamese_text,
-        remove_accents,
-    )
-finally:
-    sys.path.remove("/root/reference")
+if _HAVE_REFERENCE:
+    sys.path.insert(0, "/root/reference")
+    try:
+        from src.preprocess import (  # type: ignore  # noqa: E402
+            clean_company_name,
+            normalize_entity_types,
+            normalize_functional_terms,
+            normalize_vietnamese_text,
+            remove_accents,
+        )
+    finally:
+        sys.path.remove("/root/reference")
 
 # building blocks that exercise every rule family + nasty separators
 _FRAGMENTS = [
