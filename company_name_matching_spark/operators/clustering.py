@@ -78,6 +78,22 @@ def _union_find_labels(pairs) -> dict:
     return {x: find(x) for x in parent}
 
 
+def _driver_labels(e: DataFrame, driver_edge_threshold: int, solve):
+    """Size-gated driver path shared by CC and pivot: at most
+    ``driver_edge_threshold`` deduplicated edges are collected (Arrow, two
+    id columns) and labeled by ``solve`` — an iterable of (src, dst) →
+    ({record_id: cluster_id}, rounds). Returns None above the gate (or with
+    the gate disabled by 0), where the caller iterates distributed."""
+    if not driver_edge_threshold or e.count() > driver_edge_threshold:
+        return None
+    pdf = e.toPandas()
+    root, rounds = solve(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
+    schema = e.select(
+        F.col("src").alias("record_id"), F.col("src").alias("cluster_id")
+    ).schema
+    return e.sparkSession.createDataFrame(list(root.items()), schema), rounds
+
+
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 15,
@@ -109,32 +125,11 @@ def connected_components(
 
     e = edges.select("src", "dst").where(F.col("src") != F.col("dst")).dropDuplicates()
     e = materialize(e, "cc_edges")
-    if driver_edge_threshold and e.count() <= driver_edge_threshold:
-        schema_empty = (
-            e.select(
-                F.col("src").alias("record_id"), F.col("src").alias("cluster_id")
-            ).schema
-        )
-        pdf = e.toPandas()
-        if pdf.empty:
-            # no edges → no labeled components; skip the union-find and the
-            # local-list parallelize entirely (callers coalesce missing
-            # labels to self-labels)
-            return edges.sparkSession.createDataFrame([], schema_empty), 0
-        # numpy scalars → python scalars (createDataFrame rejects np types)
-        src = (v.item() if hasattr(v, "item") else v for v in pdf["src"])
-        dst = (v.item() if hasattr(v, "item") else v for v in pdf["dst"])
-        root = _union_find_labels(zip(src, dst))
-        spark = edges.sparkSession
-        schema = (
-            e.select(
-                F.col("src").alias("record_id"), F.col("src").alias("cluster_id")
-            ).schema
-        )
-        labels = spark.createDataFrame(
-            [(k, v) for k, v in root.items()], schema
-        )
-        return labels, 0
+    driver = _driver_labels(
+        e, driver_edge_threshold, lambda pairs: (_union_find_labels(pairs), 0)
+    )
+    if driver is not None:
+        return driver
     prev_sig = None
     rounds = 0
     for rounds in range(1, max_iterations + 1):
@@ -341,16 +336,12 @@ def pivot_clusters(
     # returned is the true round count. 10⁶ edges ≈ 16 MB of longs — the
     # same driver-state class as the CC gate. Pass 0 to always iterate
     # distributed (the 100-TB path, unchanged below).
-    if driver_edge_threshold and e.count() <= driver_edge_threshold:
-        pdf = e.toPandas()
-        src = (v.item() if hasattr(v, "item") else v for v in pdf["src"])
-        dst = (v.item() if hasattr(v, "item") else v for v in pdf["dst"])
-        root, rounds = _driver_pivot_rounds(zip(src, dst), max_rounds)
-        spark = edges.sparkSession
-        schema = e.select(
-            F.col("src").alias("record_id"), F.col("src").alias("cluster_id")
-        ).schema
-        return spark.createDataFrame(list(root.items()), schema), rounds
+    driver = _driver_labels(
+        e, driver_edge_threshold,
+        lambda pairs: _driver_pivot_rounds(pairs, max_rounds),
+    )
+    if driver is not None:
+        return driver
     sym = materialize(
         e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))),
         "pivot_edges",

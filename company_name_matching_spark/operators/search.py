@@ -58,7 +58,7 @@ class SearchConfig:
     # "hybrid_bm25": the reference's published headline config
     # (matcher.py:366-376, model 'tfidf-bm25'): 0.5·tfidf-cosine +
     # 0.5·max-normalized BM25, with the max over the whole corpus per
-    # query exactly as the reference (see bm25_corpus_max below).
+    # query exactly as the reference (matcher.py:371-373).
     # "hybrid_lsa": the reference's LSA vectorizer option (its TruncatedSVD
     # dense channel) — 0.5·tfidf-cosine + 0.5·LSA-space cosine, with the
     # LSA model fit distributed on the corpus (operators/lsa.py).
@@ -70,15 +70,10 @@ class SearchConfig:
     model: str = "fused"
     tfidf_weight: float = 0.5  # matcher.py:60
     bm25_weight: float = 0.5
-    # True (default) = reference parity: BM25 normalized by the per-query
-    # max over the WHOLE corpus (matcher.py:371-373), so reference-derived
-    # thresholds transfer. False = normalize over blocked candidates only
-    # (cheaper at extreme scale; thresholds become engine-specific).
-    bm25_corpus_max: bool = True
     # optional web-scale bound on the corpus-max posting scan: query terms
     # with df > cap are excluded from the per-query max expansion (a
     # documented lower-bound trade, bm25.bm25_pair_scores). None (default)
-    # = exact reference parity; only consulted when bm25_corpus_max=True.
+    # = exact reference parity.
     bm25_max_term_df: int | None = None
     lsa_weight: float = 0.5
     lsa_components: int = 16
@@ -260,39 +255,26 @@ def search_topk(
         # their heavy features).
         from company_name_matching_spark.operators import bm25 as bm25_mod
 
-        if cfg.bm25_corpus_max:
-            # reference parity (matcher.py:371-373): normalize by the
-            # per-query max over the WHOLE corpus, so min_score thresholds
-            # and confidence tiers transfer from the reference unchanged.
-            # ONE corpus pipeline: postings/doclens/idf (corpus-bounded
-            # tables) are built and materialized once and shared by the
-            # candidate-pair channel and the per-query max. The query×doc
-            # score table itself is NEVER persisted — its size is
-            # Σ_{t∈q} df(t), unbounded by the candidate set (it only
-            # streams through the max aggregation), and materializing it
-            # would fill scratch on high-df query terms at scale
-            # (r4 review, both passes).
-            st = bm25_mod.corpus_stats(c, materialized=True)
-            b = bm25_mod.bm25_pair_scores(
-                c, q, scored.select("left_id", "right_id"), stats=st
-            )
-            b = b.join(
-                bm25_mod.bm25_query_max(
-                    c, q, stats=st, max_term_df=cfg.bm25_max_term_df
-                ),
-                "left_id",
-                "left",
-            ).withColumn("_bmax", F.coalesce(F.col("bm25_max"), F.lit(0.0)))
-        else:
-            b = bm25_mod.bm25_pair_scores(
-                c, q, scored.select("left_id", "right_id")
-            )
-            # scale opt-out: max over blocked candidates only (no per-query
-            # corpus-wide posting scan); absolute scores can inflate when
-            # the global argmax doc is outside the block — use
-            # engine-calibrated thresholds with this setting.
-            wq_max = Window.partitionBy("left_id")
-            b = b.withColumn("_bmax", F.max("bm25").over(wq_max))
+        # reference parity (matcher.py:371-373): normalize by the per-query
+        # max over the WHOLE corpus, so min_score thresholds and confidence
+        # tiers transfer from the reference unchanged. ONE corpus pipeline:
+        # postings/doclens/idf (corpus-bounded tables) are built and
+        # materialized once and shared by the candidate-pair channel and the
+        # per-query max. The query×doc score table itself is NEVER persisted
+        # — its size is Σ_{t∈q} df(t), unbounded by the candidate set (it
+        # only streams through the max aggregation), and materializing it
+        # would fill scratch on high-df query terms at scale.
+        st = bm25_mod.corpus_stats(c, materialized=True)
+        b = bm25_mod.bm25_pair_scores(
+            c, q, scored.select("left_id", "right_id"), stats=st
+        )
+        b = b.join(
+            bm25_mod.bm25_query_max(
+                c, q, stats=st, max_term_df=cfg.bm25_max_term_df
+            ),
+            "left_id",
+            "left",
+        ).withColumn("_bmax", F.coalesce(F.col("bm25_max"), F.lit(0.0)))
         b = b.withColumn(
             "bm25_norm",
             F.when(F.col("_bmax") > 0, F.col("bm25") / F.col("_bmax")).otherwise(

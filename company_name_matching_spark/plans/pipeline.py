@@ -1,5 +1,5 @@
 """Pipeline orchestrator: normalize → block → score → cluster, with
-per-stage checkpointing, resume, and per-partition lineage metrics.
+per-stage checkpointing, resume, and per-file lineage metrics.
 
 Checkpointing model (distributed version of the reference's stage metrics +
 skip_stages orchestrator, ``orchestrator.py:89-257`` / ``utils/metrics.py``):
@@ -8,9 +8,14 @@ skip_stages orchestrator, ``orchestrator.py:89-257`` / ``utils/metrics.py``):
   plus a ``_COMPLETE.json`` marker (rows, elapsed, throughput);
 * on re-run, a stage whose marker exists is *read back*, not recomputed —
   resume-from-checkpoint mid-pipeline;
-* a ``metrics`` table accumulates one row per (run, stage, partition) with
-  row counts and throughput — the per-partition lineage the north rule asks
-  for.
+* a ``metrics`` table accumulates one row per (run, stage) with the row
+  count and throughput; its ``partitions_json`` lists the row count of each
+  parquet file the stage wrote, in part-file order — the per-partition
+  lineage the north rule asks for.
+
+Stage bookkeeping is driver-side file I/O: row counts come from the parquet
+footers the stage's own write left, and the metrics rows are appended as one
+pyarrow-written file per run, so Spark jobs run only the stages' own work.
 
 Storage is parquet-directory-based. On a production cluster the same calls
 target Iceberg tables (``writeTo(...).using("iceberg")``); the runtime here
@@ -22,11 +27,15 @@ from __future__ import annotations
 
 import json
 import time
+import uuid
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from company_name_matching_spark.operators import (
     blocking, clustering, extract, normalize, scoring,
@@ -39,19 +48,24 @@ class PipelineConfig:
     blocking: blocking.BlockingConfig = field(default_factory=blocking.BlockingConfig)
     scoring: scoring.ScoringConfig = field(default_factory=scoring.ScoringConfig)
     run_id: str = "run-0"
-    collect_partition_metrics: bool = True
     max_cc_iterations: int = 15
     # size gate for the driver union-find CC fast path (0 = always iterate
     # distributed; see clustering.connected_components)
     cc_driver_edge_threshold: int = 1_000_000
     # "cc" = transitive connected components (reference semantics);
     # "pivot" = ACN pivot clustering — star clusters, no chain over-merge
-    # (clustering.pivot_matches). Validated in run_pipeline.
+    # (clustering.pivot_matches).
     cluster_method: str = "cc"
     pivot_max_rounds: int = 12
     # also emit the golden-record survivorship table (one canonical name
     # per cluster) as a checkpointed "golden" stage / PipelineResult.golden
     emit_golden: bool = False
+
+    def __post_init__(self):
+        if self.cluster_method not in ("cc", "pivot"):
+            raise ValueError(
+                f"cluster_method must be 'cc' or 'pivot'; got {self.cluster_method!r}"
+            )
 
 
 @dataclass
@@ -65,11 +79,33 @@ class PipelineResult:
     golden: DataFrame | None = None
 
 
+# tz-aware ``ts`` so Spark reads it back as TIMESTAMP (a naive one would come
+# back as TIMESTAMP_NTZ and clash with the files earlier runs appended)
+_METRICS_SCHEMA = pa.schema([
+    ("run_id", pa.string()), ("stage", pa.string()), ("resumed", pa.bool_()),
+    ("rows", pa.int64()), ("elapsed_s", pa.float64()),
+    ("rows_per_s", pa.float64()), ("partitions_json", pa.string()),
+    ("ts", pa.timestamp("us", tz="UTC")),
+])
+
+
+def _written_rows(df: DataFrame) -> tuple[int, list[dict]]:
+    """Row count and per-file lineage of a parquet-backed stage output, read
+    from the footers of its files in part-file order (driver-side I/O, no
+    Spark job): one ``{"partition_id", "rows"}`` entry per written file."""
+    parts = []
+    for i, uri in enumerate(sorted(df.inputFiles())):
+        filesystem, path = pafs.FileSystem.from_uri(uri)
+        meta = pq.read_metadata(path, filesystem=filesystem)
+        parts.append({"partition_id": i, "rows": meta.num_rows})
+    return sum(p["rows"] for p in parts), parts
+
+
 class _Checkpointer:
-    def __init__(self, spark: SparkSession, root: str | None, cfg: PipelineConfig):
+    def __init__(self, spark: SparkSession, root: str | None, run_id: str):
         self.spark = spark
         self.root = Path(root) if root else None
-        self.cfg = cfg
+        self.run_id = run_id
         self.metrics: list[dict] = []
 
     def _dir(self, stage: str) -> Path:
@@ -78,79 +114,52 @@ class _Checkpointer:
     def has(self, stage: str) -> bool:
         return bool(self.root) and (self._dir(stage) / "_COMPLETE.json").exists()
 
-    def read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(str(self._dir(stage) / "data"))
-
-    def _count_and_partitions(self, df: DataFrame) -> tuple[int, list[dict]]:
-        """ONE job for both the stage row count and the per-partition lineage
-        rows (total = sum of partition counts) — a naive count() +
-        partition-groupBy would compute the stage twice."""
-        if not self.cfg.collect_partition_metrics:
-            return df.count(), []
-        parts = [
-            r.asDict()
-            for r in df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        ]
-        return sum(p["rows"] for p in parts), parts
-
-    def run(self, stage: str, fn, persist: bool = True) -> DataFrame:
+    def run(self, stage: str, fn) -> DataFrame:
         """Compute-or-restore a stage; record metrics either way."""
-        if self.has(stage):
-            df = self.read(stage)
-            self.metrics.append(
-                {"run_id": self.cfg.run_id, "stage": stage, "resumed": True,
-                 "rows": df.count(), "elapsed_s": 0.0, "rows_per_s": None,
-                 "partitions": []}
-            )
-            return df
         t0 = time.monotonic()
-        df = fn()
-        if self.root and persist:
-            out = self._dir(stage)
-            df.write.mode("overwrite").parquet(str(out / "data"))
-            df = self.spark.read.parquet(str(out / "data"))
+        resumed = self.has(stage)
+        data = str(self._dir(stage) / "data") if self.root else None
+        if resumed:
+            df = self.spark.read.parquet(data)
+        elif data:
+            fn().write.mode("overwrite").parquet(data)
+            df = self.spark.read.parquet(data)
         else:
             # no storage checkpoint → still materialize through parquet
-            # scratch: the stage output is consumed by the metrics job AND
-            # downstream stages (without a barrier every consumer recomputes
-            # the lineage), and .persist() is NOT a substitute — the
-            # in-memory cache scan contends badly at high thread counts
-            # (see sources/store.py)
-            df = store.materialize(df, stage)
-        rows, parts = self._count_and_partitions(df)
-        elapsed = time.monotonic() - t0
+            # scratch: the stage output is consumed by downstream stages
+            # (without a barrier every consumer recomputes the lineage), and
+            # .persist() is NOT a substitute — the in-memory cache scan
+            # contends badly at high thread counts (see sources/store.py)
+            df = store.materialize(fn(), stage)
+        rows, parts = _written_rows(df)
+        elapsed = 0.0 if resumed else time.monotonic() - t0
         entry = {
-            "run_id": self.cfg.run_id,
+            "run_id": self.run_id,
             "stage": stage,
-            "resumed": False,
+            "resumed": resumed,
             "rows": rows,
             "elapsed_s": round(elapsed, 4),
             "rows_per_s": round(rows / elapsed, 2) if elapsed > 0 else None,
             "partitions": parts,
         }
         self.metrics.append(entry)
-        if self.root and persist:
+        if data and not resumed:
             marker = self._dir(stage) / "_COMPLETE.json"
             marker.write_text(json.dumps(entry, default=str), encoding="utf-8")
         return df
 
     def flush_metrics(self):
+        """Append this run's rows to ``<root>/metrics`` as one new parquet
+        file, one row per (run, stage)."""
         if not self.root:
             return
-        rows = [
-            (m["run_id"], m["stage"], bool(m["resumed"]), int(m["rows"]),
-             float(m["elapsed_s"]),
-             float(m["rows_per_s"]) if m["rows_per_s"] else None,
-             json.dumps(m["partitions"]))
-            for m in self.metrics
-        ]
-        schema = ("run_id string, stage string, resumed boolean, rows long, "
-                  "elapsed_s double, rows_per_s double, partitions_json string")
-        (self.spark.createDataFrame(rows, schema)
-         .withColumn("ts", F.current_timestamp())
-         .write.mode("append").parquet(str(self.root / "metrics")))
+        ts = datetime.now(timezone.utc)
+        rows = [dict(m, partitions_json=json.dumps(m["partitions"]), ts=ts)
+                for m in self.metrics]
+        out = self.root / "metrics"
+        out.mkdir(parents=True, exist_ok=True)
+        pq.write_table(pa.Table.from_pylist(rows, schema=_METRICS_SCHEMA),
+                       str(out / f"part-{uuid.uuid4().hex}.parquet"))
 
 
 def run_pipeline(
@@ -167,7 +176,7 @@ def run_pipeline(
     fused into the normalize scan (no extra pass over the corpus).
     """
     cfg = cfg or PipelineConfig()
-    ck = _Checkpointer(spark, checkpoint_dir, cfg)
+    ck = _Checkpointer(spark, checkpoint_dir, cfg.run_id)
 
     if "text" not in pages.columns and "html" in pages.columns:
         pages = extract.extract_pages(pages)
@@ -181,10 +190,6 @@ def run_pipeline(
 
     matches = ck.run("score", _score)
 
-    if cfg.cluster_method not in ("cc", "pivot"):
-        raise ValueError(
-            f"cluster_method must be 'cc' or 'pivot'; got {cfg.cluster_method!r}"
-        )
     cc_rounds = 0
 
     def _cluster():

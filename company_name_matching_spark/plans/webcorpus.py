@@ -17,8 +17,9 @@ job — the pipeline a training-data team actually runs over a crawl:
 
 Every stage goes through the same ``_Checkpointer`` as the ER pipeline
 (``plans/pipeline.py``): parquet + ``_COMPLETE.json`` markers, per-stage
-row counts and throughput, resume-from-checkpoint mid-run, per-partition
-lineage metrics — the north rule's durability contract applied to the
+row counts and throughput, resume-from-checkpoint mid-run, and one metrics
+row per (run, stage) whose lineage lists the row count of each parquet file
+the stage wrote — the north rule's durability contract applied to the
 data-prep pipeline.
 
 Scale shape: stages 1–3 and 5 are single-shuffle or shuffle-free scans;
@@ -59,7 +60,6 @@ class WebCorpusConfig:
     pack_budget: int = 2048
     # bookkeeping (the _Checkpointer contract)
     run_id: str = "webcorpus-0"
-    collect_partition_metrics: bool = True
 
     def __post_init__(self):
         if not 0.0 < self.sample_rate <= 1.0:
@@ -93,7 +93,7 @@ def prepare_training_corpus(
     same id discipline as the ER pipeline's record ids.
     """
     cfg = cfg or WebCorpusConfig()
-    ck = _Checkpointer(spark, checkpoint_dir, cfg)
+    ck = _Checkpointer(spark, checkpoint_dir, cfg.run_id)
     counts: dict[str, int] = {}
 
     def _snapshots():

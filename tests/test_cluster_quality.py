@@ -55,18 +55,21 @@ def _run_pivot(spark, edge_list, max_rounds=12, driver_edge_threshold=1_000_000)
 def test_pivot_matches_reference_on_random_graphs(spark):
     """BOTH execution strategies — the size-gated driver replay (default at
     these sizes) and the distributed round iteration (gate disabled) — must
-    match the executable spec node-for-node, and each other."""
+    match the executable spec node-for-node, and each other; the empty
+    edge set labels nothing on both."""
+    graphs = {"empty": []}
     for seed in (1, 7, 42):
         rng = random.Random(seed)
         n = 60
-        edge_list = sorted({
+        graphs[f"seed {seed}"] = sorted({
             tuple(sorted(rng.sample(range(n), 2))) for _ in range(120)
         })
+    for name, edge_list in graphs.items():
         want = _pivot_reference(edge_list)
         got_driver, _ = _run_pivot(spark, edge_list)
-        assert got_driver == want, f"driver path, seed {seed}"
+        assert got_driver == want, f"driver path, {name}"
         got_dist, _ = _run_pivot(spark, edge_list, driver_edge_threshold=0)
-        assert got_dist == want, f"distributed path, seed {seed}"
+        assert got_dist == want, f"distributed path, {name}"
 
 
 def test_pivot_clusters_are_stars(spark):

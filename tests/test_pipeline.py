@@ -105,9 +105,21 @@ def test_checkpoint_resume(spark, tmp_path):
     meta = json.loads((tmp_path / "ck" / "score" / "_COMPLETE.json").read_text())
     assert meta["rows"] > 0 and meta["elapsed_s"] > 0
 
-    # resume: all stages restored, results identical
-    res2 = run_pipeline(spark, pages, checkpoint_dir=ck)
+    # resume: all stages restored, results identical; the bookkeeping is
+    # driver-side footer I/O, so no count or metrics-write job runs — at
+    # most one job (the parquet schema read) per stage
+    sc = spark.sparkContext
+    group = "test-checkpoint-resume"
+    sc.setJobGroup(group, group)
+    try:
+        res2 = run_pipeline(spark, pages, checkpoint_dir=ck)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert all(m["resumed"] for m in res2.metrics)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= len(res2.metrics), sorted(jobs)
     assert (
         res1.clusters.exceptAll(res2.clusters).count() == 0
         and res2.clusters.exceptAll(res1.clusters).count() == 0
@@ -120,7 +132,7 @@ def test_checkpoint_resume(spark, tmp_path):
     assert by_stage["normalize"] and by_stage["pairs"] and by_stage["score"]
     assert not by_stage["cluster"]
 
-    # metrics table accumulated rows for all runs, with per-partition lineage
+    # metrics table accumulated rows for all runs, with per-file lineage
     metrics = spark.read.parquet(str(tmp_path / "ck" / "metrics"))
     assert metrics.count() >= 12
     first = json.loads(
@@ -129,37 +141,85 @@ def test_checkpoint_resume(spark, tmp_path):
     assert isinstance(first, list)
 
 
-def test_pipeline_degenerate_inputs(spark):
-    """Edge partitions a 100-TB run WILL hit: empty input, a single record,
-    an all-identical corpus, and rows that fail every validation filter —
-    each must flow through normalize→block→score→cluster without error and
-    with the a-priori-correct cluster/match counts."""
+# Edge partitions a 100-TB run WILL hit: empty input, a single record, an
+# all-identical corpus, and rows that fail every validation filter — name →
+# (rows, want_clusters, want_matches).
+DEGENERATE_CASES = {
+    "empty": ([], 0, 0),
+    "single": ([("u1", "CÔNG TY TNHH MỘT MÌNH")], 1, 0),
+    "identical": (
+        [(f"u{i}", "CÔNG TY TNHH GIỐNG NHAU") for i in range(5)], 1, 10
+    ),
+    "all_invalid": ([("u1", ""), ("u2", "##$%"), ("u3", "ab")], 0, 0),
+}
+
+METRICS_SCHEMA = (
+    "struct<run_id:string,stage:string,resumed:boolean,rows:bigint,"
+    "elapsed_s:double,rows_per_s:double,partitions_json:string,ts:timestamp>"
+)
+
+
+def _degenerate_pages(spark, rows):
     import datetime as dt
 
-    from company_name_matching_spark.sources import fixtures
+    data = [
+        (u, dt.datetime(2026, 1, 1), fixtures.render_html(t), t, "vi", "x", "k")
+        for u, t in rows
+    ]
+    return spark.createDataFrame(data, fixtures.PAGES_SCHEMA)
 
-    def pages(rows):
-        data = [
-            (u, dt.datetime(2026, 1, 1), fixtures.render_html(t), t, "vi", "x", "k")
-            for u, t in rows
-        ]
-        return spark.createDataFrame(data, fixtures.PAGES_SCHEMA)
 
-    cases = {
-        "empty": ([], 0, 0),
-        "single": ([("u1", "CÔNG TY TNHH MỘT MÌNH")], 1, 0),
-        "identical": (
-            [(f"u{i}", "CÔNG TY TNHH GIỐNG NHAU") for i in range(5)], 1, 10
-        ),
-        "all_invalid": ([("u1", ""), ("u2", "##$%"), ("u3", "ab")], 0, 0),
-    }
-    for name, (rows, want_clusters, want_matches) in cases.items():
-        res = run_pipeline(spark, pages(rows))
-        got_c = res.clusters.select("cluster_id").distinct().count()
-        got_m = res.matches.count()
-        assert (got_c, got_m) == (want_clusters, want_matches), (
-            f"{name}: got clusters={got_c} matches={got_m}"
-        )
+def _check_counts(name, res, want_clusters, want_matches):
+    got_c = res.clusters.select("cluster_id").distinct().count()
+    got_m = res.matches.count()
+    assert (got_c, got_m) == (want_clusters, want_matches), (
+        f"{name}: got clusters={got_c} matches={got_m}"
+    )
+
+
+def _check_bookkeeping(res):
+    """Every stage's recorded rows equal its output's count(), and its
+    per-file lineage entries sum to them."""
+    outputs = {"normalize": res.names, "pairs": res.pairs,
+               "score": res.matches, "cluster": res.clusters}
+    assert [m["stage"] for m in res.metrics] == list(outputs)
+    for m in res.metrics:
+        assert m["rows"] == outputs[m["stage"]].count(), m
+        parts = m["partitions"]
+        assert [p["partition_id"] for p in parts] == list(range(len(parts)))
+        assert sum(p["rows"] for p in parts) == m["rows"], m
+
+
+def test_pipeline_degenerate_inputs(spark):
+    """Each degenerate input flows through normalize→block→score→cluster
+    without error, with the a-priori-correct cluster/match counts."""
+    for name, (rows, want_clusters, want_matches) in DEGENERATE_CASES.items():
+        res = run_pipeline(spark, _degenerate_pages(spark, rows))
+        _check_counts(name, res, want_clusters, want_matches)
+        _check_bookkeeping(res)
+
+
+def test_pipeline_degenerate_inputs_checkpoint_resume(spark, tmp_path):
+    """The degenerate inputs through checkpoints, computed then resumed:
+    recorded rows match count() either way, ``pairs`` lists one lineage
+    entry per part file on disk, and the metrics table keeps its schema."""
+    for name, (rows, want_clusters, want_matches) in DEGENERATE_CASES.items():
+        pages = _degenerate_pages(spark, rows)
+        ck = tmp_path / name
+        for resumed in (False, True):
+            res = run_pipeline(spark, pages, checkpoint_dir=str(ck))
+            assert all(m["resumed"] == resumed for m in res.metrics), name
+            _check_counts(name, res, want_clusters, want_matches)
+            _check_bookkeeping(res)
+            pairs = next(m for m in res.metrics if m["stage"] == "pairs")
+            files = list((ck / "pairs" / "data").glob("part-*.parquet"))
+            assert len(pairs["partitions"]) == len(files) > 0, name
+        metrics = spark.read.parquet(str(ck / "metrics"))
+        assert metrics.schema.simpleString() == METRICS_SCHEMA
+        got = sorted((r.stage, r.resumed, r.rows) for r in metrics.collect())
+        want = sorted((m["stage"], resumed, m["rows"])
+                      for m in res.metrics for resumed in (False, True))
+        assert got == want, name
 
 
 def test_pipeline_pivot_method_and_golden(spark):
@@ -200,13 +260,13 @@ def test_pipeline_pivot_method_and_golden(spark):
     assert all(r.canonical_name for r in g)
 
 
-def test_pipeline_rejects_unknown_cluster_method(spark):
+def test_pipeline_rejects_unknown_cluster_method(spark, tmp_path):
+    """The config is rejected before any stage runs or checkpoints."""
     import pytest as _pytest
 
-    from company_name_matching_spark.plans.pipeline import (
-        PipelineConfig, run_pipeline,
-    )
-
     pages = fixtures.pages_dataframe(spark, n_companies=5, per_company=2)
+    ck = tmp_path / "ck"
     with _pytest.raises(ValueError, match="cluster_method"):
-        run_pipeline(spark, pages, cfg=PipelineConfig(cluster_method="x"))
+        run_pipeline(spark, pages, checkpoint_dir=str(ck),
+                     cfg=PipelineConfig(cluster_method="x"))
+    assert not ck.exists()
