@@ -39,9 +39,6 @@ def bm25_scores(
     query_terms: list[str],
     id_col: str = "doc_id",
     text_col: str = "text",
-    k1: float = K1,
-    b: float = B,
-    epsilon: float = EPSILON,
 ) -> DataFrame:
     """Score every document against a bag of query terms.
 
@@ -52,8 +49,10 @@ def bm25_scores(
     """
     spark = docs.sparkSession
     st = corpus_stats(
-        docs.select(F.col(id_col), _tokens(F.col(text_col)).alias("tokens")),
-        id_col, "tokens", epsilon,
+        docs.select(
+            F.col(id_col).alias("record_id"),
+            _tokens(F.col(text_col)).alias("tokens"),
+        )
     )
     if st.n_docs == 0 or st.avgdl <= 0.0:  # empty corpus: stable schema
         return docs.select(F.col(id_col), F.lit(0.0).alias("bm25")).where(F.lit(False))
@@ -69,11 +68,11 @@ def bm25_scores(
         .withColumn(
             "contrib",
             F.col("idf")
-            * (F.col("tf") * (k1 + 1.0))
+            * (F.col("tf") * (K1 + 1.0))
             / (
                 F.col("tf")
-                + F.lit(k1)
-                * (1.0 - b + F.lit(b) * F.col("dl") / F.lit(avgdl))
+                + F.lit(K1)
+                * (1.0 - B + F.lit(B) * F.col("dl") / F.lit(avgdl))
             ),
         )
         .groupBy("doc")
@@ -99,30 +98,18 @@ class BmCorpusStats:
     idf: DataFrame | None
     n_docs: int
     avgdl: float
-    # the configuration the stats were built under — consumers validate
-    # against it so a prebuilt stats object can't be silently mixed with
-    # different tokenization or flooring (r4 review)
-    id_col: str = "record_id"
-    tokens_col: str = "tokens"
-    epsilon: float = EPSILON
 
 
-def corpus_stats(
-    corpus: DataFrame,
-    id_col: str = "record_id",
-    tokens_col: str = "tokens",
-    epsilon: float = EPSILON,
-    materialized: bool = False,
-) -> BmCorpusStats:
-    """Build the corpus-side BM25 state once. With ``materialized=True``
-    the postings/doclens/idf tables are written through the parquet
-    barrier, so several downstream scorings (candidate-pair channel +
-    corpus-wide per-query max in hybrid search) share one tokenize +
-    aggregation pipeline instead of re-executing it per consumer —
-    WITHOUT ever persisting a query×doc score table (whose size is
-    Σ_{t∈q} df(t), unbounded by the candidate set)."""
+def corpus_stats(corpus: DataFrame, materialized: bool = False) -> BmCorpusStats:
+    """Build the corpus-side BM25 state once from (record_id, tokens). With
+    ``materialized=True`` the postings/doclens/idf tables are written
+    through the parquet barrier, so several downstream scorings
+    (candidate-pair channel + corpus-wide per-query max in hybrid search)
+    share one tokenize + aggregation pipeline instead of re-executing it
+    per consumer — WITHOUT ever persisting a query×doc score table (whose
+    size is Σ_{t∈q} df(t), unbounded by the candidate set)."""
     c_toks = corpus.select(
-        F.col(id_col).alias("doc"), F.explode(F.col(tokens_col)).alias("term")
+        F.col("record_id").alias("doc"), F.explode(F.col("tokens")).alias("term")
     )
     postings = c_toks.groupBy("doc", "term").agg(F.count(F.lit(1)).alias("tf"))
     doclens = c_toks.groupBy("doc").agg(F.count(F.lit(1)).alias("dl"))
@@ -134,8 +121,7 @@ def corpus_stats(
     n_docs = corpus.count()
     avgdl = float(doclens.agg(F.avg("dl")).collect()[0][0] or 0.0)
     if n_docs == 0 or avgdl <= 0.0:
-        return BmCorpusStats(postings, doclens, None, n_docs, avgdl,
-                             id_col, tokens_col, epsilon)
+        return BmCorpusStats(postings, doclens, None, n_docs, avgdl)
     raw_idf = F.log(
         (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )
@@ -149,76 +135,46 @@ def corpus_stats(
         ).collect()[0][0]
     )
     idf = df_all.withColumn(
-        "idf", F.when(raw_idf < 0, F.lit(epsilon * avg_idf)).otherwise(raw_idf)
+        "idf", F.when(raw_idf < 0, F.lit(EPSILON * avg_idf)).otherwise(raw_idf)
     ).select("term", "idf")
     if materialized:
         from company_name_matching_spark.sources.store import materialize
 
         idf = materialize(idf, "bm25_idf")
-    return BmCorpusStats(postings, doclens, idf, n_docs, avgdl,
-                         id_col, tokens_col, epsilon)
+    return BmCorpusStats(postings, doclens, idf, n_docs, avgdl)
 
 
 def bm25_pair_scores(
     corpus: DataFrame,
     queries: DataFrame,
     pairs: DataFrame | None,
-    id_col: str = "record_id",
-    tokens_col: str = "tokens",
-    k1: float = K1,
-    b: float = B,
-    epsilon: float = EPSILON,
     stats: BmCorpusStats | None = None,
-    max_term_df: int | None = None,
 ) -> DataFrame:
     """BM25 of (query, doc) for an explicit candidate-pair list — the
     retrieval channel of the reference's tfidf+BM25 hybrid
     (``matching/matcher.py:366-376``) re-expressed as distributed posting
     joins.
 
-    ``pairs`` is (left_id=query record, right_id=corpus record). Corpus
-    statistics (df, avgdl, N, the rank_bm25 epsilon·avg_idf floor) come
-    from corpus-wide aggregations exactly as in :func:`bm25_scores`; the
-    per-pair sum is an explode→join→agg bounded by Σ|query terms| × the
-    pair list — never corpus × vocab. Query-term multiplicity is preserved
-    (rank_bm25 iterates duplicates). Returns (left_id, right_id, bm25)
-    for pairs with ≥1 matching term.
+    ``corpus`` and ``queries`` are (record_id, tokens) tables; ``pairs`` is
+    (left_id=query record, right_id=corpus record). Corpus statistics (df,
+    avgdl, N, the rank_bm25 epsilon·avg_idf floor) come from corpus-wide
+    aggregations exactly as in :func:`bm25_scores`; the per-pair sum is an
+    explode→join→agg bounded by Σ|query terms| × the pair list — never
+    corpus × vocab. Query-term multiplicity is preserved (rank_bm25
+    iterates duplicates). Returns (left_id, right_id, bm25) for pairs with
+    ≥1 matching term.
 
     ``pairs=None`` scores every (query, doc) pair sharing ≥1 term — the
     reference's ``get_scores`` over the whole corpus. Per-query cost is
     Σ_{t∈q} df(t) posting rows (a skewed equi-join AQE can split), NOT
     corpus × queries; used by :func:`bm25_query_max` for corpus-wide
     max normalization.
-
-    ``max_term_df`` (pairs=None path only) bounds that scan for
-    pathological high-df query terms (corpus-wide legal forms, template
-    chrome): terms with df > cap are EXCLUDED from the posting expansion,
-    capping the per-query row cost at |q|·max_term_df. Documented trade
-    (same pattern as the containment channel's fp-df cap): returned
-    scores become lower bounds missing the capped terms' contributions —
-    each ≤ qtf·idf(t)·(k1+1) per doc, and high-df terms carry the
-    SMALLEST idf (floored at ε·avg_idf once df > N/2), so rankings and
-    maxima move least where the cap bites most. Default None = exact
-    reference parity; the explicit-pairs path is already candidate-
-    bounded and never capped.
     """
-    if stats is not None and (
-        stats.id_col != id_col
-        or stats.tokens_col != tokens_col
-        or stats.epsilon != epsilon
-    ):
-        raise ValueError(
-            "bm25_pair_scores stats were built with "
-            f"(id_col={stats.id_col!r}, tokens_col={stats.tokens_col!r}, "
-            f"epsilon={stats.epsilon}) but the call passes "
-            f"(id_col={id_col!r}, tokens_col={tokens_col!r}, "
-            f"epsilon={epsilon}) — scores would silently mix two "
-            "configurations"
-        )
-    st = stats or corpus_stats(corpus, id_col, tokens_col, epsilon)
+    st = stats or corpus_stats(corpus)
     if st.n_docs == 0 or st.avgdl <= 0.0:
         empty = pairs if pairs is not None else corpus.select(
-            F.col(id_col).alias("left_id"), F.col(id_col).alias("right_id")
+            F.col("record_id").alias("left_id"),
+            F.col("record_id").alias("right_id"),
         )
         return empty.select(
             "left_id", "right_id", F.lit(0.0).alias("bm25")
@@ -227,8 +183,8 @@ def bm25_pair_scores(
 
     q_terms = (
         queries.select(
-            F.col(id_col).alias("left_id"),
-            F.explode(F.col(tokens_col)).alias("term"),
+            F.col("record_id").alias("left_id"),
+            F.explode(F.col("tokens")).alias("term"),
         )
         .groupBy("left_id", "term")
         .agg(F.count(F.lit(1)).alias("qtf"))
@@ -243,17 +199,6 @@ def bm25_pair_scores(
             )
         )
     else:
-        if max_term_df is not None:
-            # drop pathological high-df terms BEFORE the expansion: one
-            # cheap agg over the corpus-bounded postings table, then a
-            # semi-join that shrinks q_terms — never the posting scan
-            ok_terms = (
-                postings.groupBy("term")
-                .agg(F.count(F.lit(1)).alias("_df"))
-                .where(F.col("_df") <= max_term_df)
-                .select("term")
-            )
-            q_terms = q_terms.join(ok_terms, "term", "left_semi")
         # all matching docs per query: postings equi-join on term alone
         matched = q_terms.join(
             postings.withColumnRenamed("doc", "right_id"), "term"
@@ -266,10 +211,10 @@ def bm25_pair_scores(
             "contrib",
             F.col("qtf")
             * F.col("idf")
-            * (F.col("tf") * (k1 + 1.0))
+            * (F.col("tf") * (K1 + 1.0))
             / (
                 F.col("tf")
-                + F.lit(k1) * (1.0 - b + F.lit(b) * F.col("dl") / F.lit(avgdl))
+                + F.lit(K1) * (1.0 - B + F.lit(B) * F.col("dl") / F.lit(avgdl))
             ),
         )
         .groupBy("left_id", "right_id")
@@ -284,13 +229,7 @@ def bm25_pair_scores(
 def bm25_query_max(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "record_id",
-    tokens_col: str = "tokens",
-    k1: float = K1,
-    b: float = B,
-    epsilon: float = EPSILON,
     stats: BmCorpusStats | None = None,
-    max_term_df: int | None = None,
 ) -> DataFrame:
     """Per-query CORPUS-WIDE BM25 maximum — the reference's normalizer
     (``matching/matcher.py:371-373``: ``bm25_scores_raw.max()`` over
@@ -302,14 +241,8 @@ def bm25_query_max(
     Cost: Σ_{t∈q} df(t) posting rows per query (hot legal-form terms are a
     skewed but AQE-splittable equi-join), corpus-size-bounded per query —
     the price of the reference's own normalization semantics.
-    ``max_term_df`` caps that cost at web scale by excluding df > cap
-    terms from the expansion (see :func:`bm25_pair_scores` for the
-    documented lower-bound trade); default None = exact parity.
     """
-    all_scores = bm25_pair_scores(
-        corpus, queries, None, id_col, tokens_col, k1, b, epsilon, stats,
-        max_term_df=max_term_df,
-    )
+    all_scores = bm25_pair_scores(corpus, queries, None, stats)
     return all_scores.groupBy("left_id").agg(
         F.max("bm25").alias("bm25_max")
     )

@@ -83,8 +83,12 @@ def _driver_labels(e: DataFrame, driver_edge_threshold: int, solve):
     ``driver_edge_threshold`` deduplicated edges are collected (Arrow, two
     id columns) and labeled by ``solve`` — an iterable of (src, dst) →
     ({record_id: cluster_id}, rounds). Returns None above the gate (or with
-    the gate disabled by 0), where the caller iterates distributed."""
-    if not driver_edge_threshold or e.count() > driver_edge_threshold:
+    the gate disabled by 0), where the caller iterates distributed. ``e`` is
+    the barrier the caller just wrote, so its size comes from the parquet
+    footers, not from a count job."""
+    from company_name_matching_spark.sources.store import _written_rows
+
+    if not driver_edge_threshold or _written_rows(e)[0] > driver_edge_threshold:
         return None
     pdf = e.toPandas()
     root, rounds = solve(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
@@ -322,7 +326,7 @@ def pivot_clusters(
     Returns (labels(record_id, cluster_id = pivot id), rounds). Nodes
     absent from ``edges`` are the caller's concern (:func:`attach_singletons`).
     """
-    from company_name_matching_spark.sources.store import materialize
+    from company_name_matching_spark.sources.store import _written_rows, materialize
 
     e = edges.select("src", "dst").where(F.col("src") != F.col("dst")).dropDuplicates()
     e = materialize(e, "pivot_edges_in")
@@ -355,8 +359,9 @@ def pivot_clusters(
     labels = spark.createDataFrame([], schema)
     rounds = 0
     rank_of = lambda c: F.md5(F.col(c).cast("string"))  # noqa: E731
+    # active is a barrier, so its size is read from the parquet footers
     while rounds < max_rounds:
-        if active.count() == 0:
+        if _written_rows(active)[0] == 0:
             break
         rounds += 1
         # 1. min active-neighbor rank per node (sym is active×active here)
@@ -389,7 +394,7 @@ def pivot_clusters(
             "pivot_edges",
         )
     else:
-        if active.count() > 0:
+        if _written_rows(active)[0] > 0:
             raise RuntimeError(
                 f"pivot_clusters: graph not drained after {max_rounds} rounds"
             )

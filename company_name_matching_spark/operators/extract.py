@@ -14,9 +14,10 @@ against the driver-side reference implementation
 
 * ``extract_text_expr``  — pure Catalyst expressions (decode, two
   ``regexp_replace`` passes, an ordered entity-replace chain). Stays
-  inside whole-stage codegen, shuffles nothing, and is the production
-  default: at 10^12 pages the extraction scan is the single biggest
-  full-corpus pass in the pipeline, so it must not leave the JVM.
+  inside whole-stage codegen, shuffles nothing, and is what
+  ``extract_pages`` runs: at 10^12 pages the extraction scan is the
+  single biggest full-corpus pass in the pipeline, so it must not leave
+  the JVM.
   Covers the five standard named entities (``&amp; &lt; &gt; &quot;
   &#x27;/&#39;``) plus decimal/hex numeric references for the ASCII and
   Latin-1 range — the entities that deterministic template chrome
@@ -119,21 +120,13 @@ def extract_pages(
     pages: DataFrame,
     html_col: str = "html",
     out_col: str = "text",
-    method: str = "jvm",
 ) -> DataFrame:
-    """Add/overwrite ``out_col`` with the text extracted from ``html_col``.
-
-    ``method='jvm'`` (default, codegen) or ``'pandas'`` (full entity
-    table). The pipeline front stage: pages tables that arrive without a
-    ``text`` column (crawl-raw) run through this before normalization.
+    """Add/overwrite ``out_col`` with the text :func:`extract_text_expr`
+    extracts from ``html_col``. The pipeline front stage: pages tables that
+    arrive without a ``text`` column (crawl-raw) run through this before
+    normalization.
     """
-    if method == "jvm":
-        col = extract_text_expr(html_col)
-    elif method == "pandas":
-        col = extract_text_udf(F.col(html_col))
-    else:
-        raise ValueError(f"unknown extraction method {method!r}")
-    return pages.withColumn(out_col, col)
+    return pages.withColumn(out_col, extract_text_expr(html_col))
 
 
 def canonicalize_url_expr(url_col: Column | str) -> Column:

@@ -49,52 +49,41 @@ _KNOWN_MODELS = frozenset(
 )
 
 
+# matcher.py:60 — every hybrid model blends its extra retrieval channel with
+# the base score at these weights: 0.5·base + 0.5·channel
+FUSION_WEIGHT = 0.5
+# hybrid_lsa: the LSA model fit on the corpus (operators/lsa.py)
+LSA_COMPONENTS = 16
+LSA_VOCAB = 512
+# hybrid_dense: sign-LSH buckets over the embeddings, planes × tables
+DENSE_PLANES = 8
+DENSE_TABLES = 8
+
+
 @dataclass
 class SearchConfig:
     k: int = 5
     min_score: float = 0.0
     # "fused": the 4-channel pairwise fusion (cos/jaccard/JW/Lev) — this
-    # engine's default, Top-1 100% on the reference corpus.
+    # engine's default, Top-1 100% on the reference corpus. The other
+    # models blend one channel into the tfidf cosine at FUSION_WEIGHT:
     # "hybrid_bm25": the reference's published headline config
-    # (matcher.py:366-376, model 'tfidf-bm25'): 0.5·tfidf-cosine +
-    # 0.5·max-normalized BM25, with the max over the whole corpus per
-    # query exactly as the reference (matcher.py:371-373).
+    # (matcher.py:366-376, model 'tfidf-bm25'), BM25 normalized by the
+    # per-query max over the whole corpus (matcher.py:371-373).
     # "hybrid_lsa": the reference's LSA vectorizer option (its TruncatedSVD
-    # dense channel) — 0.5·tfidf-cosine + 0.5·LSA-space cosine, with the
-    # LSA model fit distributed on the corpus (operators/lsa.py).
-    # "cross_rerank": the reference's cross-encoder rerank shape — the
-    # lexical fused score shortlists, then a joint (query, candidate)
-    # scorer (encode.cross_encoder_scores, sigmoid-calibrated) refines the
-    # fuzzy scores. The scorer is the deterministic stand-in unless a real
-    # model factory is injected (no torch in this environment).
+    # dense channel), cosine in the corpus-fit LSA space.
+    # "hybrid_dense": the reference's 'tfidf-dense' shape (matcher.py:378+),
+    # dense-embedding cosine; candidates also come from sign-LSH buckets,
+    # so translation pairs with ZERO token overlap are retrievable.
+    # "cross_rerank": the reference's cross-encoder rerank shape — a joint
+    # (query, candidate) scorer (encode.cross_encoder_scores) blended into
+    # the fused score of the fuzzy candidates.
     model: str = "fused"
-    tfidf_weight: float = 0.5  # matcher.py:60
-    bm25_weight: float = 0.5
-    # optional web-scale bound on the corpus-max posting scan: query terms
-    # with df > cap are excluded from the per-query max expansion (a
-    # documented lower-bound trade, bm25.bm25_pair_scores). None (default)
-    # = exact reference parity.
-    bm25_max_term_df: int | None = None
-    lsa_weight: float = 0.5
-    lsa_components: int = 16
-    lsa_vocab: int = 512
-    cross_weight: float = 0.5
+    # pluggable models (executor-side construction); None = the
+    # deterministic stand-ins (no torch in this environment)
     cross_scorer_factory: object = None  # encode.PairScorerFactory
-    # "hybrid_dense": the reference's 'tfidf-dense' shape (matcher.py:378+,
-    # SentenceTransformer channel): 0.5·tfidf-cosine + 0.5·dense cosine.
-    # The encoder is pluggable (encode.EncoderFactory, executor-side
-    # construction); the default is the deterministic hash stand-in — NOT a
-    # semantic model (no torch in this environment), but the full
-    # distributed plumbing (encode → LSH retrieval → fused scoring) is real
-    # and a SentenceTransformer factory drops in unchanged. Candidates come
-    # from lexical blocking ∪ dense sign-LSH buckets, so translation pairs
-    # with ZERO token overlap are retrievable — the piece a rerank-only
-    # dense stage can't provide.
-    dense_weight: float = 0.5
     dense_encoder_factory: object = None  # encode.EncoderFactory
     dense_dim: int = 64
-    dense_planes: int = 8
-    dense_tables: int = 8
     # optional query-side alias rules (pattern, replacement) applied to the
     # QUERY match_key after normalization — e.g. crosslang.EN_VI_ALIASES
     # for EN→VI sector terms. Query-side only: corpus keys are untouched,
@@ -210,7 +199,7 @@ def search_topk(
                     f"{side} side but SearchConfig.dense_dim={cfg.dense_dim}"
                     " — set dense_dim to the model's output width"
                 )
-        tables = md5_hyperplanes(cfg.dense_dim, cfg.dense_planes, cfg.dense_tables)
+        tables = md5_hyperplanes(cfg.dense_dim, DENSE_PLANES, DENSE_TABLES)
 
         def _buckets(vdf):
             keyed = vdf.select(
@@ -218,7 +207,7 @@ def search_topk(
                 F.array(
                     *[
                         _bucket_col(F.col("v"), tables[t], t)
-                        for t in range(cfg.dense_tables)
+                        for t in range(DENSE_TABLES)
                     ]
                 ).alias("_keys"),
             )  # staged before the explode: see the blocking module docstring
@@ -246,13 +235,11 @@ def search_topk(
     idf = scoring.build_idf(c, n=search_scoring.ngram)
     scored = scoring.score_pairs(union_names, cand, idf, search_scoring)
 
+    # each non-fused model attaches its retrieval channel as a non-NULL
+    # "_channel" column; the blend below replaces the fused pairwise score
     if cfg.model == "hybrid_bm25":
-        # reference 'tfidf-bm25' (matcher.py:366-376): replace the fused
-        # pairwise score with 0.5·tfidf-cos + 0.5·(bm25 / per-query max).
-        # Exact match-key pairs keep score 1.0 (their cos_sim is 1.0 and
-        # the exact doc is the per-query BM25 argmax, so the formula would
-        # give ~1.0 anyway; keeping the exact short-circuit avoids joining
-        # their heavy features).
+        # reference 'tfidf-bm25' (matcher.py:366-376): the channel is
+        # bm25 / per-query max.
         from company_name_matching_spark.operators import bm25 as bm25_mod
 
         # reference parity (matcher.py:371-373): normalize by the per-query
@@ -269,11 +256,7 @@ def search_topk(
             c, q, scored.select("left_id", "right_id"), stats=st
         )
         b = b.join(
-            bm25_mod.bm25_query_max(
-                c, q, stats=st, max_term_df=cfg.bm25_max_term_df
-            ),
-            "left_id",
-            "left",
+            bm25_mod.bm25_query_max(c, q, stats=st), "left_id", "left"
         ).withColumn("_bmax", F.coalesce(F.col("bm25_max"), F.lit(0.0)))
         b = b.withColumn(
             "bm25_norm",
@@ -283,27 +266,19 @@ def search_topk(
         ).select("left_id", "right_id", "bm25_norm")
         scored = (
             scored.join(b, ["left_id", "right_id"], "left")
-            .withColumn(
-                "score",
-                F.when(F.col("score") >= 1.0, F.col("score")).otherwise(
-                    F.lit(cfg.tfidf_weight) * F.col("cos_sim")
-                    + F.lit(cfg.bm25_weight)
-                    * F.coalesce(F.col("bm25_norm"), F.lit(0.0))
-                ),
-            )
+            .withColumn("_channel", F.coalesce(F.col("bm25_norm"), F.lit(0.0)))
             .drop("bm25_norm")
         )
 
     if cfg.model == "hybrid_lsa":
         # dense LSA channel: fit on the corpus (driver footprint = vocab²,
         # corpus-size-free), project both sides, cosine in the latent space.
-        # Exact match-key pairs keep the 1.0 short-circuit as in hybrid_bm25.
         from company_name_matching_spark.operators import lsa as lsa_mod
         from company_name_matching_spark.operators.dedup import cosine_col
 
         model = lsa_mod.fit(
             c, "record_id", "match_key",
-            n_components=cfg.lsa_components, vocab_size=cfg.lsa_vocab,
+            n_components=LSA_COMPONENTS, vocab_size=LSA_VOCAB,
         )
         cv = lsa_mod.transform(c, model, "record_id", "match_key").select(
             F.col("record_id").alias("right_id"), F.col("lsa").alias("_r_lsa")
@@ -315,26 +290,18 @@ def search_topk(
             scored.join(qv, "left_id", "left")
             .join(cv, "right_id", "left")
             .withColumn(
-                "_lsa_cos",
+                "_channel",
                 F.when(
                     F.col("_l_lsa").isNotNull() & F.col("_r_lsa").isNotNull(),
                     cosine_col(F.col("_l_lsa"), F.col("_r_lsa")),
                 ).otherwise(F.lit(0.0)),
             )
-            .withColumn(
-                "score",
-                F.when(F.col("score") >= 1.0, F.col("score")).otherwise(
-                    F.lit(cfg.tfidf_weight) * F.col("cos_sim")
-                    + F.lit(cfg.lsa_weight) * F.col("_lsa_cos")
-                ),
-            )
-            .drop("_l_lsa", "_r_lsa", "_lsa_cos")
+            .drop("_l_lsa", "_r_lsa")
         )
 
     if cfg.model == "hybrid_dense":
-        # 0.5·tfidf-cos + 0.5·dense cosine (reference 'tfidf-dense' shape);
-        # exact match-key pairs keep the 1.0 short-circuit. Vectors were
-        # materialized at candidate generation.
+        # dense cosine, floored at 0 (reference 'tfidf-dense' shape). Vectors
+        # were materialized at candidate generation.
         from company_name_matching_spark.operators.dedup import cosine_col
 
         scored = (
@@ -349,27 +316,23 @@ def search_topk(
                 "right_id", "left",
             )
             .withColumn(
-                "_d_cos",
-                F.when(
-                    F.col("_l_v").isNotNull() & F.col("_r_v").isNotNull(),
-                    cosine_col(F.col("_l_v"), F.col("_r_v")),
-                ).otherwise(F.lit(0.0)),
-            )
-            .withColumn(
-                "score",
-                F.when(F.col("score") >= 1.0, F.col("score")).otherwise(
-                    F.lit(cfg.tfidf_weight) * F.col("cos_sim")
-                    + F.lit(cfg.dense_weight) * F.greatest("_d_cos", F.lit(0.0))
+                "_channel",
+                F.greatest(
+                    F.when(
+                        F.col("_l_v").isNotNull() & F.col("_r_v").isNotNull(),
+                        cosine_col(F.col("_l_v"), F.col("_r_v")),
+                    ).otherwise(F.lit(0.0)),
+                    F.lit(0.0),
                 ),
             )
-            .drop("_l_v", "_r_v", "_d_cos")
+            .drop("_l_v", "_r_v")
         )
 
     if cfg.model == "cross_rerank":
-        # joint-scorer rerank on the fuzzy candidates only (exact pairs keep
-        # the 1.0 short-circuit): cross-encoders are O(pairs), so the
-        # shortlist IS the blocked candidate set — at larger k budgets,
-        # pre-truncate with a window on the lexical score first.
+        # joint-scorer rerank on the fuzzy candidates only: cross-encoders
+        # are O(pairs), so the shortlist IS the blocked candidate set — at
+        # larger k budgets, pre-truncate with a window on the lexical score
+        # first.
         from company_name_matching_spark.operators import encode
 
         fuzzy_pairs = (
@@ -398,16 +361,24 @@ def search_topk(
         ).withColumnRenamed("score", "_ce")
         scored = (
             scored.join(ce, ["left_id", "right_id"], "left")
-            .withColumn(
-                "score",
-                F.when(F.col("score") >= 1.0, F.col("score")).otherwise(
-                    F.lit(1.0 - cfg.cross_weight) * F.col("score")
-                    + F.lit(cfg.cross_weight)
-                    * F.coalesce(F.col("_ce"), F.lit(0.0))
-                ),
-            )
+            .withColumn("_channel", F.coalesce(F.col("_ce"), F.lit(0.0)))
             .drop("_ce")
         )
+
+    if cfg.model != "fused":
+        # matcher.py:60,370-376: 0.5·base + 0.5·channel, where the base is
+        # the tfidf cosine, or the fused score that cross_rerank refines.
+        # Exact match-key pairs keep score 1.0 (for the hybrids their cos_sim
+        # is 1.0 and the channel ~1.0 anyway; the short-circuit avoids
+        # joining their heavy features).
+        base = "score" if cfg.model == "cross_rerank" else "cos_sim"
+        scored = scored.withColumn(
+            "score",
+            F.when(F.col("score") >= 1.0, F.col("score")).otherwise(
+                F.lit(FUSION_WEIGHT) * F.col(base)
+                + F.lit(FUSION_WEIGHT) * F.col("_channel")
+            ),
+        ).drop("_channel")
 
     # attach sides: query info + candidate (corpus) info
     qs = q.select(

@@ -34,7 +34,6 @@ from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 
 from company_name_matching_spark.operators import (
@@ -56,7 +55,6 @@ class PipelineConfig:
     # "pivot" = ACN pivot clustering — star clusters, no chain over-merge
     # (clustering.pivot_matches).
     cluster_method: str = "cc"
-    pivot_max_rounds: int = 12
     # also emit the golden-record survivorship table (one canonical name
     # per cluster) as a checkpointed "golden" stage / PipelineResult.golden
     emit_golden: bool = False
@@ -89,18 +87,6 @@ _METRICS_SCHEMA = pa.schema([
 ])
 
 
-def _written_rows(df: DataFrame) -> tuple[int, list[dict]]:
-    """Row count and per-file lineage of a parquet-backed stage output, read
-    from the footers of its files in part-file order (driver-side I/O, no
-    Spark job): one ``{"partition_id", "rows"}`` entry per written file."""
-    parts = []
-    for i, uri in enumerate(sorted(df.inputFiles())):
-        filesystem, path = pafs.FileSystem.from_uri(uri)
-        meta = pq.read_metadata(path, filesystem=filesystem)
-        parts.append({"partition_id": i, "rows": meta.num_rows})
-    return sum(p["rows"] for p in parts), parts
-
-
 class _Checkpointer:
     def __init__(self, spark: SparkSession, root: str | None, run_id: str):
         self.spark = spark
@@ -121,17 +107,15 @@ class _Checkpointer:
         data = str(self._dir(stage) / "data") if self.root else None
         if resumed:
             df = self.spark.read.parquet(data)
-        elif data:
-            fn().write.mode("overwrite").parquet(data)
-            df = self.spark.read.parquet(data)
         else:
-            # no storage checkpoint → still materialize through parquet
-            # scratch: the stage output is consumed by downstream stages
+            # a computed stage goes through the parquet barrier at its
+            # checkpoint location, or in scratch when there is none: the
+            # stage output is consumed by downstream stages
             # (without a barrier every consumer recomputes the lineage), and
             # .persist() is NOT a substitute — the in-memory cache scan
             # contends badly at high thread counts (see sources/store.py)
-            df = store.materialize(fn(), stage)
-        rows, parts = _written_rows(df)
+            df = store.materialize(fn(), stage, path=data)
+        rows, parts = store._written_rows(df)
         elapsed = 0.0 if resumed else time.monotonic() - t0
         entry = {
             "run_id": self.run_id,
@@ -195,9 +179,7 @@ def run_pipeline(
     def _cluster():
         nonlocal cc_rounds
         if cfg.cluster_method == "pivot":
-            clusters, cc_rounds = clustering.pivot_matches(
-                matches, names, cfg.pivot_max_rounds
-            )
+            clusters, cc_rounds = clustering.pivot_matches(matches, names)
         else:
             clusters, cc_rounds = clustering.cluster_matches(
                 matches, names, cfg.max_cc_iterations,

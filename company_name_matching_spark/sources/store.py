@@ -23,6 +23,8 @@ import itertools
 import shutil
 import tempfile
 
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame
 
 _counter = itertools.count()
@@ -43,11 +45,27 @@ def _scratch_dir() -> str:
     return _scratch
 
 
-def materialize(df: DataFrame, label: str = "stage") -> DataFrame:
-    """Hard materialization barrier: parquet write + read-back."""
-    path = f"{_scratch_dir()}/{label}-{next(_counter)}"
+def materialize(
+    df: DataFrame, label: str = "stage", path: str | None = None
+) -> DataFrame:
+    """Hard materialization barrier: parquet write + read-back, at ``path``
+    (a checkpoint location) or under the session scratch dir. The read-back
+    takes ``df``'s schema, so Spark runs no job to infer it from the files."""
+    path = path or f"{_scratch_dir()}/{label}-{next(_counter)}"
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
+def _written_rows(df: DataFrame) -> tuple[int, list[dict]]:
+    """Row count and per-file lineage of a parquet-backed table, read from
+    the footers of its files in part-file order (driver-side I/O, no Spark
+    job): one ``{"partition_id", "rows"}`` entry per written file."""
+    parts = []
+    for i, uri in enumerate(sorted(df.inputFiles())):
+        filesystem, path = pafs.FileSystem.from_uri(uri)
+        meta = pq.read_metadata(path, filesystem=filesystem)
+        parts.append({"partition_id": i, "rows": meta.num_rows})
+    return sum(p["rows"] for p in parts), parts
 
 
 def fanout_repartition(df: DataFrame) -> DataFrame:

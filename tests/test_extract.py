@@ -8,7 +8,6 @@ must reproduce the driver-side reference implementation
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import functions as F
 
 from company_name_matching_spark.operators import extract
@@ -40,14 +39,17 @@ def _pages_df(spark, texts):
     return spark.createDataFrame(rows, "url string, html binary")
 
 
+def _udf_pages(df, out_col="text"):
+    """The pandas-UDF extractor applied the way ``extract_pages`` applies
+    the JVM one."""
+    return df.withColumn(out_col, extract.extract_text_udf(F.col("html")))
+
+
 class TestExtractParity:
     def test_jvm_and_pandas_match_reference_bytes(self, spark):
         df = _pages_df(spark, ADVERSARIAL)
         jvm = {r.url: r.text for r in extract.extract_pages(df).collect()}
-        pnd = {
-            r.url: r.text
-            for r in extract.extract_pages(df, method="pandas").collect()
-        }
+        pnd = {r.url: r.text for r in _udf_pages(df).collect()}
         for r in df.collect():
             want = fixtures.extract_text(
                 bytes(r.html) if r.html is not None else None
@@ -59,19 +61,18 @@ class TestExtractParity:
         """fixtures.render_html → extractor reproduces the text column
         byte-for-byte on the full synthetic pages corpus (both paths)."""
         pages = fixtures.pages_dataframe(spark, n_companies=40, per_company=3)
-        for method in ("jvm", "pandas"):
-            out = extract.extract_pages(
-                pages.select("url", "html", F.col("text").alias("want")),
-                out_col="got",
-                method=method,
-            )
+        src = pages.select("url", "html", F.col("text").alias("want"))
+        for method, out in (
+            ("jvm", extract.extract_pages(src, out_col="got")),
+            ("pandas", _udf_pages(src, out_col="got")),
+        ):
             bad = out.where(F.col("got") != F.col("want")).count()
             assert bad == 0, method
 
     def test_null_html_empty_string(self, spark):
         df = _pages_df(spark, [])
-        for method in ("jvm", "pandas"):
-            (row,) = extract.extract_pages(df, method=method).collect()
+        for out in (extract.extract_pages(df), _udf_pages(df)):
+            (row,) = out.collect()
             assert row.text == ""
 
     def test_pandas_path_full_entity_table(self, spark):
@@ -80,14 +81,10 @@ class TestExtractParity:
         and the full-``html.unescape`` path for real crawl HTML."""
         df = _pages_df(spark, ["<p>caf&eacute; &hellip;</p>"])
         df = df.where(F.col("html").isNotNull())
-        (pnd,) = extract.extract_pages(df, method="pandas").collect()
+        (pnd,) = _udf_pages(df).collect()
         assert pnd.text == "café …"
-        (jvm,) = extract.extract_pages(df, method="jvm").collect()
+        (jvm,) = extract.extract_pages(df).collect()
         assert jvm.text == "caf&eacute; &hellip;"  # passes through, no mangling
-
-    def test_unknown_method_raises(self, spark):
-        with pytest.raises(ValueError, match="unknown extraction method"):
-            extract.extract_pages(_pages_df(spark, []), method="bs4")
 
 
 CANON_CASES = [

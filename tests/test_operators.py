@@ -211,6 +211,24 @@ def test_connected_components_driver_equals_distributed(spark):
                     "x-1": "x-1", "x-2": "x-1"}
 
 
+def test_connected_components_gate_boundary(spark):
+    """The driver gate compares the DEDUPLICATED edge count (read from the
+    barrier's footers) with the threshold: N edges at threshold N take the
+    driver path, at N-1 the distributed one, with equal labels."""
+    edges = spark.createDataFrame(
+        # a duplicate and a self-loop, both dropped before the gate: N = 4
+        [(1, 2), (2, 3), (3, 4), (10, 11), (1, 2), (5, 5)], "src long, dst long"
+    )
+    at, r_at = clustering.connected_components(edges, driver_edge_threshold=4)
+    below, r_below = clustering.connected_components(
+        edges, driver_edge_threshold=3
+    )
+    assert r_at == 0 and r_below >= 1
+    assert sorted(map(tuple, at.collect())) == sorted(
+        map(tuple, below.collect())
+    ) == [(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)]
+
+
 def test_connected_components_star_and_cycle(spark):
     edges = spark.createDataFrame(
         [(5, 1), (5, 2), (5, 3), (7, 8), (8, 9), (9, 7)], "src long, dst long"

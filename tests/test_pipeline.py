@@ -10,7 +10,7 @@ from company_name_matching_spark.plans.pipeline import (
     PipelineConfig,
     run_pipeline,
 )
-from company_name_matching_spark.sources import fixtures
+from company_name_matching_spark.sources import fixtures, store
 
 
 def _f1(matches, ids, pred_col):
@@ -124,6 +124,22 @@ def test_checkpoint_resume(spark, tmp_path):
         res1.clusters.exceptAll(res2.clusters).count() == 0
         and res2.clusters.exceptAll(res1.clusters).count() == 0
     )
+
+    # a barrier's read-back takes the written frame's schema: the write is
+    # its only job, and the schema equals the one Spark infers from the files
+    probe = "test-materialize-readback"
+    sc.setJobGroup(probe, probe)
+    try:
+        back = store.materialize(
+            spark.range(10).withColumn("x", F.lit("a")), "probe"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(probe)) == 1
+    written = back.inputFiles()[0].rsplit("/", 1)[0]
+    assert back.schema == spark.read.parquet(written).schema
 
     # partial resume: delete the last stage marker → only it recomputes
     (tmp_path / "ck" / "cluster" / "_COMPLETE.json").unlink()

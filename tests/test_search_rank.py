@@ -275,6 +275,64 @@ def test_search_hybrid_bm25_top1(spark, corpus_queries):
     assert bad == 0
 
 
+def test_search_hybrid_bm25_score_is_the_blend(spark):
+    """Each hybrid_bm25 score is 0.5·cos_sim + 0.5·bm25/max, recomputed here
+    from scoring.score_pairs' cos_sim and from bm25_pair_scores /
+    bm25_query_max over the same normalized tables (matcher.py:60,366-376)."""
+    import dataclasses
+
+    from company_name_matching_spark.operators import bm25, normalize, scoring
+
+    corpus = spark.createDataFrame(
+        [
+            ("A", "CÔNG TY TNHH SAO MAI"),
+            ("B", "CÔNG TY CỔ PHẦN SAO VIỆT"),
+            ("C", "CÔNG TY TNHH MAI LINH"),
+            ("D", "CÔNG TY TNHH BÌNH MINH"),
+            # unrelated names keep df(sao), df(mai) < N/2: positive idf
+            ("E", "CÔNG TY TNHH HOÀNG LONG"),
+            ("F", "CÔNG TY TNHH THIÊN PHÚ"),
+            ("G", "CÔNG TY TNHH ĐẠI DƯƠNG"),
+        ],
+        "company_id string, name string",
+    )
+    queries = spark.createDataFrame(
+        [("Q1", "sao mai xanh")], "query_id string, query_text string"
+    )
+    res = search_topk(corpus, queries, SearchConfig(k=7, model="hybrid_bm25"))
+    got = {r["company_id"]: r["score"] for r in res.collect()}
+
+    c = normalize.normalize_mentions(corpus, "company_id", "name", id_domain="c:")
+    q = normalize.normalize_mentions(queries, "query_id", "query_text",
+                                     id_domain="q:")
+    assert not any(r["has_repeat"] for r in c.collect())  # no ×0.85 penalty
+    cand = q.select(F.col("record_id").alias("left_id")).crossJoin(
+        c.select(F.col("record_id").alias("right_id"))
+    )
+    cfg = dataclasses.replace(scoring.ScoringConfig(), repeat_penalty=1.0)
+    scored = scoring.score_pairs(
+        c.unionByName(q), cand, scoring.build_idf(c, n=cfg.ngram), cfg
+    )
+    fused = {r["right_id"]: (r["score"], r["cos_sim"]) for r in scored.collect()}
+    bm = {r["right_id"]: r["bm25"]
+          for r in bm25.bm25_pair_scores(c, q, cand).collect()}
+    (bmax,) = [r["bm25_max"] for r in bm25.bm25_query_max(c, q).collect()]
+    assert bmax > 0
+    cid = {r["source_id"]: r["record_id"] for r in c.collect()}
+
+    assert got and set(got) <= set(cid)
+    fuzzy = 0
+    for company, score in got.items():
+        fused_score, cos = fused[cid[company]]
+        if fused_score >= 1.0:
+            want = fused_score
+        else:
+            fuzzy += 1
+            want = 0.5 * cos + 0.5 * (bm.get(cid[company], 0.0) / bmax)
+        assert abs(score - want) <= 1e-6, (company, score, want)
+    assert fuzzy == len(got)  # the query matches no corpus key exactly
+
+
 def test_search_hybrid_lsa_top1(spark, corpus_queries):
     """The reference's LSA vectorizer option as a dense search channel:
     0.5·tfidf-cos + 0.5·LSA-space cosine (operators/lsa.py fit on the
@@ -371,64 +429,6 @@ def test_bm25_query_max_is_corpus_wide(spark):
         for r in restricted.groupBy("left_id").agg(F.max("bm25").alias("m")).collect()
     }
     assert got[11] > r_max[11]
-
-
-def test_bm25_query_max_term_df_cap(spark):
-    """max_term_df (VERDICT r5 #8): the web-scale bound on the corpus-max
-    posting scan. Capped = exactly the uncapped max computed over queries
-    with the high-df terms REMOVED (a lower bound); default None is
-    bit-identical to the uncapped path; a cap below every df yields no
-    rows (all query terms excluded)."""
-    from company_name_matching_spark.operators import bm25
-
-    corpus = spark.createDataFrame(
-        [
-            # "inc" is corpus-wide template chrome: df = 5 = N
-            (1, ["inc", "sao", "mai"]),
-            (2, ["inc", "sao"]),
-            (3, ["inc", "toan", "cau"]),
-            (4, ["inc", "binh"]),
-            (5, ["inc", "an", "phat"]),
-        ],
-        "record_id bigint, tokens array<string>",
-    )
-    queries = spark.createDataFrame(
-        [(10, ["inc", "sao", "mai"]), (11, ["inc"])],
-        "record_id bigint, tokens array<string>",
-    )
-    uncapped = {
-        r["left_id"]: r["bm25_max"]
-        for r in bm25.bm25_query_max(corpus, queries).collect()
-    }
-    # None default == uncapped (parity)
-    assert uncapped == {
-        r["left_id"]: r["bm25_max"]
-        for r in bm25.bm25_query_max(
-            corpus, queries, max_term_df=None
-        ).collect()
-    }
-    # cap=4 excludes only "inc" (df=5); equals the uncapped max over the
-    # SAME queries with "inc" stripped — and query 11 (all terms capped)
-    # disappears rather than scoring 0
-    capped = {
-        r["left_id"]: r["bm25_max"]
-        for r in bm25.bm25_query_max(
-            corpus, queries, max_term_df=4
-        ).collect()
-    }
-    stripped = queries.select(
-        "record_id",
-        F.array_remove(F.col("tokens"), "inc").alias("tokens"),
-    )
-    expected = {
-        r["left_id"]: r["bm25_max"]
-        for r in bm25.bm25_query_max(corpus, stripped).collect()
-    }
-    assert capped == expected and set(capped) == {10}
-    # the cap is a LOWER bound on the true max ("inc" idf is the floored
-    # ε·avg_idf — positive — so dropping it can only shrink the score)
-    assert capped[10] < uncapped[10]
-    assert bm25.bm25_query_max(corpus, queries, max_term_df=0).count() == 0
 
 
 def test_catalog_partitioned_read_pins_written_schema(spark, tmp_path):
