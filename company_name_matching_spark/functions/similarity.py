@@ -6,9 +6,9 @@ implemented directly:
 * char-trigram TF-IDF cosine — the distributed analog of the reference's
   sklearn char-ngram TF-IDF (``matcher.py:119-134,282-283``): IDF comes from
   a Spark aggregation over the corpus (``SURVEY.md`` V1/A10), broadcast as a
-  plain dict; records carry precomputed L2-normalized sparse vectors so each
-  pair scoring is a sparse dot product (computed ONCE per record, not per
-  pair).
+  plain dict; the pair kernel builds each distinct key's L2-normalized
+  sparse vector once per Arrow batch, so each pair scoring is a sparse dot
+  product.
 * Jaro-Winkler — classic definition, short-string loop inside the Arrow
   batch (names are <100 chars; the batch boundary, not the row boundary, is
   the Python-crossing).

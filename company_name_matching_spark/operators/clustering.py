@@ -21,6 +21,7 @@ InMemoryRelation scan contends at high local parallelism.)
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -95,7 +96,10 @@ def _driver_labels(e: DataFrame, driver_edge_threshold: int, solve):
     schema = e.select(
         F.col("src").alias("record_id"), F.col("src").alias("cluster_id")
     ).schema
-    return e.sparkSession.createDataFrame(list(root.items()), schema), rounds
+    # a pandas frame goes through Arrow; a list of tuples would be pickled
+    # row by row through plain Python workers
+    labels = pd.DataFrame({"record_id": list(root), "cluster_id": list(root.values())})
+    return e.sparkSession.createDataFrame(labels, schema), rounds
 
 
 def connected_components(

@@ -9,9 +9,10 @@ Feature split between JVM and Arrow:
 * JVM-native: token-set Jaccard (``array_intersect``/``array_union``),
   Levenshtein similarity (``F.levenshtein``), exact-key equality, entity-type
   mismatch, repeated-token flags.
-* Arrow pandas UDF: char-trigram TF-IDF cosine (sparse dot of per-record
-  precomputed L2-normalized vectors — computed once per record, not per
-  pair) and Jaro-Winkler. One UDF call per pair batch, columnar.
+* Arrow pandas UDF: char-trigram TF-IDF cosine (sparse dot of
+  L2-normalized vectors, each built once per distinct match key in an Arrow
+  batch from the broadcast IDF) and Jaro-Winkler. One Python pass per
+  ``score_pairs`` call, over the distinct fuzzy key pairs.
 
 Kernel similarities are computed once per DISTINCT match-key pair and
 joined back to record pairs (see :func:`score_pairs`) — on web corpora the
@@ -39,14 +40,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    FloatType,
-    IntegerType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from company_name_matching_spark.functions import similarity
 
@@ -307,7 +301,10 @@ def soft_tfidf_pairs(
 
 
 def build_idf(
-    names: DataFrame, string_col: str = "match_key", n: int = 3
+    names: DataFrame,
+    string_col: str = "match_key",
+    n: int = 3,
+    n_docs: int | None = None,
 ) -> dict:
     """Distributed document-frequency over char n-grams → {gram: (id, idf)}.
 
@@ -317,8 +314,11 @@ def build_idf(
 
     ``explode(array_distinct(...)) → groupBy(gram).count()`` is a bounded-
     cardinality aggregation (map-side partial agg + one small shuffle).
+    ``n_docs`` is ``names``' row count; a caller that already knows it (a
+    parquet barrier's footers) saves the count job.
     """
-    n_docs = names.count()
+    if n_docs is None:
+        n_docs = names.count()
     df_rows = (
         names.select(
             F.explode(
@@ -335,39 +335,6 @@ def build_idf(
     }
 
 
-# float32 values: halves the vector bytes moved through shuffles and the
-# Arrow boundary; cosine is computed in float64 after transfer (precision
-# loss ~1e-7, far below any threshold granularity)
-_VEC_SCHEMA = StructType(
-    [
-        StructField("tg_idx", ArrayType(IntegerType()), False),
-        StructField("tg_val", ArrayType(FloatType()), False),
-    ]
-)
-
-
-def featurize(names: DataFrame, idf: dict, cfg: ScoringConfig | None = None) -> DataFrame:
-    """Attach per-record sparse TF-IDF vectors (one Arrow pass per record)."""
-    cfg = cfg or ScoringConfig()
-    spark = SparkSession.getActiveSession()
-    idf_bc = spark.sparkContext.broadcast(idf)
-    n = cfg.ngram
-
-    @F.pandas_udf(_VEC_SCHEMA)
-    def _vec_udf(match_key: pd.Series) -> pd.DataFrame:
-        table = idf_bc.value
-        idx, val = [], []
-        for s in match_key:
-            i, v = similarity.tfidf_vector(s or "", table, n)
-            idx.append(i)
-            val.append(v)
-        return pd.DataFrame({"tg_idx": idx, "tg_val": val})
-
-    return names.withColumn("_vec", _vec_udf("match_key")).select(
-        "*", F.col("_vec.tg_idx").alias("tg_idx"), F.col("_vec.tg_val").alias("tg_val")
-    ).drop("_vec")
-
-
 _PAIR_UDF_SCHEMA = StructType(
     [
         StructField("cos_sim", DoubleType(), False),
@@ -376,39 +343,52 @@ _PAIR_UDF_SCHEMA = StructType(
 )
 
 
-@F.pandas_udf(_PAIR_UDF_SCHEMA)
-def _pair_sims_udf(
-    l_cleaned: pd.Series,
-    r_cleaned: pd.Series,
-    l_idx: pd.Series,
-    l_val: pd.Series,
-    r_idx: pd.Series,
-    r_val: pd.Series,
-) -> pd.DataFrame:
-    cos = np.empty(len(l_cleaned), dtype=np.float64)
-    for k in range(len(l_cleaned)):
-        cos[k] = similarity.sparse_cosine(
-            np.asarray(l_idx.iloc[k], dtype=np.int64),
-            np.asarray(l_val.iloc[k], dtype=np.float64),
-            np.asarray(r_idx.iloc[k], dtype=np.int64),
-            np.asarray(r_val.iloc[k], dtype=np.float64),
+def _pair_sims_udf(idf: dict, n: int):
+    """Arrow pair kernel over (l_match_key, r_match_key) → (cos_sim, jw_sim).
+
+    Each key's TF-IDF vector is built inside the batch from the broadcast
+    IDF, once per distinct key in the batch. Its weights are rounded to
+    float32: the vectors used to cross a Spark ``FloatType`` column, and the
+    rounding keeps ``cos_sim`` bit-identical to that. The cosine is the
+    scalar :func:`similarity.sparse_cosine`, pair by pair in row order.
+    """
+    idf_bc = SparkSession.getActiveSession().sparkContext.broadcast(idf)
+
+    @F.pandas_udf(_PAIR_UDF_SCHEMA)
+    def _sims(l_key: pd.Series, r_key: pd.Series) -> pd.DataFrame:
+        table, vecs = idf_bc.value, {}
+
+        def vec(s):
+            v = vecs.get(s)
+            if v is None:
+                ids, vals = similarity.tfidf_vector(s or "", table, n)
+                v = vecs[s] = (
+                    np.asarray(ids, dtype=np.int64),
+                    np.asarray(vals, dtype=np.float32).astype(np.float64),
+                )
+            return v
+
+        left, right = l_key.tolist(), r_key.tolist()
+        cos = np.fromiter(
+            (similarity.sparse_cosine(*vec(a), *vec(b))
+             for a, b in zip(left, right)),
+            dtype=np.float64, count=len(left),
         )
-    jw = similarity.jaro_winkler_batch(l_cleaned.tolist(), r_cleaned.tolist())
-    return pd.DataFrame({"cos_sim": cos, "jw_sim": jw})
+        jw = similarity.jaro_winkler_batch(left, right)
+        return pd.DataFrame({"cos_sim": cos, "jw_sim": jw})
+
+    return _sims
 
 
 # light features: enough to decide exactness + post-rules — no arrays, no
 # strings: match-key equality is decided on an 8-byte xxhash64 key id, so
 # the 12.4M-row pair base never carries the key strings through its
-# shuffles/scratch (the strings ride only the fuzzy-remainder heavy join).
+# shuffles/scratch (the strings ride only the fuzzy-remainder key join).
 # Collision budget: 64-bit ids expect ~n²/2⁶⁵ birthday collisions (≈3·10³
 # at 10^12 distinct names — error rate 3e-9, same class as the xxhash64
 # record ids used engine-wide). If that matters, widen to 128 bits with a
 # second-seed hash pair: (xxhash64(k), xxhash64(k, lit(1))).
 _LIGHT_COLS = ("record_id", "key_id", "entity_type", "has_repeat")
-# heavy features: key string + token arrays + sparse vectors, joined only
-# for fuzzy pairs
-_HEAVY_COLS = ("record_id", "match_key", "tokens", "tg_idx", "tg_val")
 
 _OUT_COLS = ("left_id", "right_id", "jaccard", "lev_sim", "cos_sim", "jw_sim",
              "score", "is_match")
@@ -422,31 +402,28 @@ def score_pairs(
 ) -> DataFrame:
     """pairs(left_id, right_id) × names features → scored pairs with
     ``is_match``. ``names`` is the normalize-stage output (record_id,
-    match_key, tokens, entity_type, has_repeat — NOT pre-featurized);
-    ``idf`` defaults to :func:`build_idf` over ``names``.
+    match_key, tokens, entity_type, has_repeat); ``idf`` defaults to
+    :func:`build_idf` over ``names``. With ``idf`` given (or both vector
+    weights zero) the call is lazy: it launches no Spark job.
 
-    Three-tier plan (the dominant cost at scale is moving the TF-IDF
-    vectors through the join and the Arrow boundary, not the kernels):
+    Two-tier plan:
 
     1. join only the LIGHT features (8-byte key id, entity_type,
-       has_repeat — no UDF anywhere near them); pairs with equal match
-       keys — the bulk of a dedup-heavy workload — are decided right there
-       (score 1.0) and never touch the vectors;
-    2. the fuzzy remainder is deduplicated to DISTINCT oriented key pairs;
-       the featurize Arrow UDF runs over DISTINCT match keys only (corpus
-       rows >> distinct names on web data), and only those key features
-       cross into the pair UDF — kernel cost scales with unique name
-       pairs, not page pairs;
-    3. kernel results join back to the record pairs, where the
-       record-level rules (repeat penalty, entity conflict, threshold)
-       apply.
+       has_repeat) to the pairs; pairs with equal match keys — the bulk of
+       a dedup-heavy workload — are decided right there (score 1.0) and
+       never reach the kernels;
+    2. the fuzzy remainder is deduplicated to DISTINCT oriented key pairs,
+       which take their key strings and token sets from the distinct-key
+       table and cross into ONE Arrow pair UDF (cosine + Jaro-Winkler) —
+       kernel cost scales with unique name pairs, not page pairs. The
+       results join back to the record pairs, where the record-level rules
+       (repeat penalty, entity conflict, threshold) apply.
     """
     cfg = cfg or ScoringConfig()
     # config-aware kernel selection: with BOTH vector channels zero-weighted
     # (the SQL-expressible jaccard+lev configuration, e.g. the oracle-backed
     # fuzzy-ER entry) the TF-IDF vectors and the Arrow cos/JW kernel cannot
-    # affect the score — skip the IDF build, the featurize UDF, and the pair
-    # UDF entirely (sf0.1 fuzzy-ER entry: 40.2 → see BENCH.md)
+    # affect the score — skip the IDF build and the pair UDF entirely
     need_vectors = cfg.w_cosine != 0.0 or cfg.w_jw != 0.0
     if idf is None and need_vectors:
         idf = build_idf(names, n=cfg.ngram)
@@ -458,16 +435,14 @@ def score_pairs(
     # base stays LAZY (r6): it is consumed twice — once by the distinct-key
     # dedup below (narrow: two 8-byte ids) and once by the final assembly —
     # and re-deriving it costs one extra broadcast-join pass over the pair
-    # list, strictly cheaper than the old write+read parquet barrier of the
-    # full pair base (the in-memory cache alternative anti-scales, see
+    # list, strictly cheaper than a write+read parquet barrier of the full
+    # pair base (the in-memory cache alternative anti-scales, see
     # sources/store).
     base = (
         pairs.join(l_light, pairs.left_id == l_light.l_record_id)
         .join(r_light, pairs.right_id == r_light.r_record_id)
         .drop("l_record_id", "r_record_id")
     )
-    from company_name_matching_spark.sources.store import materialize
-
     fuzzy = base.where(F.col("l_key_id") != F.col("r_key_id"))
 
     # Every kernel similarity (jaccard / lev / cosine / JW) is a pure
@@ -475,62 +450,35 @@ def score_pairs(
     # TF-IDF vectors = tfidf_vector(match_key), lev/JW run on the keys
     # themselves. Records sharing a key are interchangeable, so compute
     # kernels ONCE per distinct (l_key_id, r_key_id) and join the results
-    # back to the record pairs — on duplicate-heavy web corpora the heavy
+    # back to the record pairs — on duplicate-heavy web corpora the key
     # join + Arrow volume shrinks by the duplication factor squared
     # (record-level rules — repeat penalty, entity conflict — stay on the
     # record pair below). Orientation is preserved (no least/greatest
     # canonicalization) so every float matches the per-pair computation
     # bit-for-bit.
-    ukp = fuzzy.select("l_key_id", "r_key_id").dropDuplicates()
-    # per-key feature table: dedup to DISTINCT match keys, keep only keys
-    # that actually appear in a fuzzy pair (on a long-tail corpus most
-    # distinct names sit in dropped/singleton blocks and never pair — no
-    # reason to featurize them), THEN run the vector UDF and materialize
-    # once — it feeds BOTH sides of the kernel join, and without a barrier
-    # each side would re-run the UDF (plan showed 2× ArrowEvalPython)
-    fuzzy_key_ids = (
-        ukp.select(F.col("l_key_id").alias("key_id"))
-        .union(ukp.select(F.col("r_key_id").alias("key_id")))
-        .dropDuplicates()
-    )
+    k = fuzzy.select("l_key_id", "r_key_id").dropDuplicates()
     keys = (
         names.select("match_key", "tokens")
         .dropDuplicates(["match_key"])
         .withColumn("key_id", F.xxhash64("match_key"))
-        .join(fuzzy_key_ids, "key_id", "left_semi")
     )
-    if need_vectors:
-        kf = materialize(
-            featurize(keys, idf, cfg).select(
-                "key_id", *[c for c in _HEAVY_COLS if c != "record_id"]
-            ),
-            "key_features",
-        )
-    else:
-        # light per-key features: jaccard/lev need only the key string and
-        # its token set — no Arrow boundary, no vector columns
-        kf = materialize(
-            keys.select("key_id", "match_key", "tokens"), "key_features_light"
-        )
-    _kf_cols = [c for c in kf.columns if c != "key_id"]
-    l_kf = kf.select(
-        F.col("key_id").alias("l_key_id"),
-        *[F.col(c).alias(f"lh_{c}") for c in _kf_cols],
-    )
-    r_kf = kf.select(
-        F.col("key_id").alias("r_key_id"),
-        *[F.col(c).alias(f"rh_{c}") for c in _kf_cols],
-    )
-    k = ukp
     if need_vectors:
         # AQE coalesces the small distinct key-pair exchange into one
         # partition, which would run the pair UDF in one task; it never
         # coalesces a repartition by number. Spreading the id pairs before
-        # the feature joins shuffles two longs a row, not the vectors.
+        # the key joins shuffles two longs a row, not the key strings.
         k = k.repartition(
             int(names.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         )
-    k = k.join(l_kf, "l_key_id").join(r_kf, "r_key_id")
+    for side in ("l", "r"):
+        k = k.join(
+            keys.select(
+                F.col("key_id").alias(f"{side}_key_id"),
+                F.col("match_key").alias(f"{side}h_match_key"),
+                F.col("tokens").alias(f"{side}h_tokens"),
+            ),
+            f"{side}_key_id",
+        )
 
     inter = F.size(F.array_intersect("lh_tokens", "rh_tokens"))
     union = F.size(F.array_union("lh_tokens", "rh_tokens"))
@@ -548,12 +496,12 @@ def score_pairs(
         ).otherwise(0.0),
     )
     if need_vectors:
-        k = k.withColumn("_sims", _pair_sims_udf(
-            "lh_match_key", "rh_match_key",
-            "lh_tg_idx", "lh_tg_val", "rh_tg_idx", "rh_tg_val"
-        )).select("l_key_id", "r_key_id", "jaccard", "lev_sim",
-                  F.col("_sims.cos_sim").alias("cos_sim"),
-                  F.col("_sims.jw_sim").alias("jw_sim"))
+        sims = _pair_sims_udf(idf, cfg.ngram)
+        k = k.withColumn("_sims", sims("lh_match_key", "rh_match_key")).select(
+            "l_key_id", "r_key_id", "jaccard", "lev_sim",
+            F.col("_sims.cos_sim").alias("cos_sim"),
+            F.col("_sims.jw_sim").alias("jw_sim"),
+        )
     else:
         k = k.select(
             "l_key_id", "r_key_id", "jaccard", "lev_sim",

@@ -116,7 +116,10 @@ def search_topk(
     # distinct id domains: corpus and query ids live in different id spaces,
     # and a corpus id that string-equals a query id must NOT collide to the
     # same record_id (it would fan out the scoring joins)
-    from company_name_matching_spark.sources.store import materialize
+    from company_name_matching_spark.sources.store import (
+        _written_rows,
+        materialize,
+    )
 
     # materialize both normalized tables: c and q fan into blocking, IDF,
     # scoring, and the output joins — without a barrier the corpus-wide
@@ -231,8 +234,11 @@ def search_topk(
     # would double-penalize fuzzy pairs (0.7225×).
     union_names = c.unionByName(q)
     search_scoring = dataclasses.replace(cfg.scoring, repeat_penalty=1.0)
-    # corpus-side IDF, the reference's fit corpus
-    idf = scoring.build_idf(c, n=search_scoring.ngram)
+    # corpus-side IDF, the reference's fit corpus; ``c`` is a barrier, so
+    # its row count comes from the parquet footers
+    idf = scoring.build_idf(
+        c, n=search_scoring.ngram, n_docs=_written_rows(c)[0]
+    )
     scored = scoring.score_pairs(union_names, cand, idf, search_scoring)
 
     # each non-fused model attaches its retrieval channel as a non-NULL

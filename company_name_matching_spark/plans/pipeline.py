@@ -35,6 +35,7 @@ from pathlib import Path
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from company_name_matching_spark.operators import (
     blocking, clustering, extract, normalize, scoring,
@@ -87,6 +88,18 @@ _METRICS_SCHEMA = pa.schema([
 ])
 
 
+def _footer_schema(data: str) -> StructType | None:
+    """The Spark schema stored in the footer of a stage's first part file
+    (``org.apache.spark.sql.parquet.row.metadata``), or None without one."""
+    parts = sorted(Path(data).glob("part-*.parquet"))
+    if not parts:
+        return None
+    raw = (pq.read_metadata(str(parts[0])).metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata"
+    )
+    return StructType.fromJson(json.loads(raw)) if raw else None
+
+
 class _Checkpointer:
     def __init__(self, spark: SparkSession, root: str | None, run_id: str):
         self.spark = spark
@@ -106,7 +119,12 @@ class _Checkpointer:
         resumed = self.has(stage)
         data = str(self._dir(stage) / "data") if self.root else None
         if resumed:
-            df = self.spark.read.parquet(data)
+            # the schema the stage's write left in its footers: reading with
+            # it runs no schema-inference job
+            reader, schema = self.spark.read, _footer_schema(data)
+            if schema is not None:
+                reader = reader.schema(schema)
+            df = reader.parquet(data)
         else:
             # a computed stage goes through the parquet barrier at its
             # checkpoint location, or in scratch when there is none: the
@@ -166,10 +184,11 @@ def run_pipeline(
         pages = extract.extract_pages(pages)
 
     names = ck.run("normalize", lambda: normalize.normalize_pages(pages))
+    n_names = ck.metrics[-1]["rows"]
     pairs = ck.run("pairs", lambda: blocking.candidate_pairs(names, cfg.blocking))
 
     def _score():
-        idf = scoring.build_idf(names, n=cfg.scoring.ngram)
+        idf = scoring.build_idf(names, n=cfg.scoring.ngram, n_docs=n_names)
         return scoring.score_pairs(names, pairs, idf, cfg.scoring)
 
     matches = ck.run("score", _score)
