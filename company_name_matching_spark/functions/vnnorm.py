@@ -297,13 +297,6 @@ def norm_key(s: pd.Series) -> pd.Series:
     return fold_accents(_canonical_base(s)).str.strip()
 
 
-def matcher_norm_key(s: pd.Series) -> pd.Series:
-    """The matcher's result-grouping key: ``remove_accents(cleaned)``
-    (``matcher.py:244-263``). Since clean_name already folds accents this
-    equals clean_name, kept as an explicit alias for spec clarity."""
-    return clean_name(s, remove_stopwords=True)
-
-
 def match_key(s: pd.Series) -> pd.Series:
     """Blocking/matching string: ``clean_name`` + match-side synonym layer +
     re-collapse. Byte-parity functions stay untouched; this is the engine's

@@ -58,7 +58,6 @@ blocking. Three Catalyst rules matter, and :func:`generate_blocks` and
 
 from __future__ import annotations
 
-import math
 import random
 from dataclasses import dataclass, field
 
@@ -86,21 +85,6 @@ class BlockingConfig:
     max_block_size: int = 200  # raise to ~1000 at cluster scale
     seed: int = 42
     channels: tuple[str, ...] = ("prefix", "lsh")
-    # Data-driven hot-block cap (VERDICT r3 #9). The static max_block_size
-    # is tuning folklore: at 100× corpus scale ORGANIC blocks grow past any
-    # fixed number and a static cap silently drops their pairs (recall
-    # collapse), while a pathological key still needs dropping. With
-    # adaptive_cap=True the cap becomes
-    #   max(floor, ceil(approx_percentile(block_size, quantile) * margin))
-    # — anchored to the observed distribution, so only blocks 'margin'×
-    # beyond the quantile (true skew outliers) are dropped, and recall loss
-    # is bounded by construction at any scale. Costs one extra bounded
-    # aggregation over the (materialized) blocks. Default off: existing
-    # pipelines keep byte-identical behavior.
-    adaptive_cap: bool = False
-    adaptive_cap_quantile: float = 0.999
-    adaptive_cap_margin: float = 4.0
-    adaptive_cap_floor: int = 64
     _params: list[tuple[int, int]] = field(default_factory=list, repr=False)
 
     def params(self) -> list[tuple[int, int]]:
@@ -355,27 +339,16 @@ def filter_blocks(
     contracted key-domain path in :func:`candidate_pairs` blocks DISTINCT
     match keys but the cap must keep measuring *records*, so each key row
     carries its member count as the weight — block sizes (and therefore the
-    kept/dropped set, including the adaptive cap's quantile) are value-equal
-    to the record-level blocking they contract.
+    kept/dropped set) are value-equal to the record-level blocking they
+    contract.
     """
     size_expr = (
         F.sum(weight_col) if weight_col else F.count(F.lit(1))
     )
     sizes = blocks.groupBy("block_key").agg(size_expr.alias("_bsz"))
-    cap = cfg.max_block_size
-    if cfg.adaptive_cap:
-        # bounded driver scalar: one approximate quantile over block sizes
-        q = sizes.agg(
-            F.expr(
-                f"approx_percentile(_bsz, {cfg.adaptive_cap_quantile})"
-            ).alias("q")
-        ).collect()[0]["q"]
-        cap = max(
-            int(math.ceil((q or 1) * cfg.adaptive_cap_margin)),
-            cfg.adaptive_cap_floor,
-        )
     keep = sizes.where(
-        (F.col("_bsz") >= min_size) & (F.col("_bsz") <= F.lit(cap))
+        (F.col("_bsz") >= min_size)
+        & (F.col("_bsz") <= F.lit(cfg.max_block_size))
     ).select("block_key")
     return blocks.join(keep, "block_key")
 
@@ -481,7 +454,7 @@ def candidate_pairs(
         "_n",
     )
     # 2. key-level blocks, weighted by member count so the hot-block cap
-    #    (and adaptive quantile) see the SAME sizes as record-level blocking
+    #    sees the SAME sizes as record-level blocking
     blocks = filter_blocks(
         materialize(
             generate_blocks(key_names, cfg, passthrough=("_n",)), "key_blocks"

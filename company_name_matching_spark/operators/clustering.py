@@ -172,39 +172,32 @@ def attach_singletons(labels: DataFrame, names: DataFrame) -> DataFrame:
     return labels.union(missing)
 
 
-def cluster_matches(matches: DataFrame, names: DataFrame,
-                    max_iterations: int = 15,
-                    driver_edge_threshold: int = 1_000_000) -> tuple[DataFrame, int]:
-    """Scored pairs (is_match=true) → clusters(record_id, cluster_id).
+def _contract_exact(
+    matches: DataFrame, names: DataFrame, solve
+) -> tuple[DataFrame, int]:
+    """Exact-key contraction shared by :func:`cluster_matches` and
+    :func:`pivot_matches`: records sharing a ``match_key`` map to their
+    min-record representative, ``solve`` (rep edges(src, dst) → (labels,
+    rounds)) clusters the fuzzy edges BETWEEN representatives, and the
+    labels expand back to every record. A rep without fuzzy edges labels
+    itself, which covers pure-exact groups AND singletons."""
+    from company_name_matching_spark.sources.store import materialize
 
-    Known exact-duplicate cliques are CONTRACTED before the iterative CC:
-    records sharing a ``match_key`` are provably one component (exact pairs
-    score 1.0), so each group maps to its min-record representative and CC
-    runs only on fuzzy edges BETWEEN representatives. On dup-heavy corpora
-    (the common web case) this shrinks the iterated graph by the duplicate
-    factor and usually saves whole rounds — each round is a fixed-latency
-    barrier, the dominant cluster-stage cost at high parallelism. Final
-    labels expand back through the group map; cluster_id stays the min
-    record_id of the full component (min is preserved: every group rep IS
-    its group's min, and CC labels components by min rep)."""
     groups = names.groupBy("match_key").agg(F.min("record_id").alias("rep"))
     # LEFT join + self-coalesce so rep_of covers EVERY record (a NULL
     # match_key never equi-joins; such a record becomes its own rep). With
-    # full coverage the final expansion already labels every record and the
-    # old trailing attach_singletons pass — a left_anti join + union over
-    # the full record set — is provably empty, so it is gone (r6: two fewer
-    # jobs per cluster call at any scale).
-    rep_of = (
+    # full coverage the final expansion already labels every record, so no
+    # trailing singleton pass (a left_anti join + union over the full record
+    # set) is needed.
+    rep_of = materialize(
         names.select("record_id", "match_key")
         .join(groups, "match_key", "left")
         .select(
             "record_id",
             F.coalesce(F.col("rep"), F.col("record_id")).alias("rep"),
-        )
+        ),
+        "repmap",
     )
-    from company_name_matching_spark.sources.store import materialize
-
-    rep_of = materialize(rep_of, "cc_repmap")
     edges = matches.where(F.col("is_match")).select(
         F.col("left_id").alias("src"), F.col("right_id").alias("dst")
     )
@@ -215,12 +208,7 @@ def cluster_matches(matches: DataFrame, names: DataFrame,
         .where(F.col("src_rep") != F.col("dst_rep"))
         .select(F.col("src_rep").alias("src"), F.col("dst_rep").alias("dst"))
     )
-    rep_labels, rounds = connected_components(
-        rep_edges, max_iterations, driver_edge_threshold
-    )
-    # expand: record → its rep's component label (reps without fuzzy edges
-    # label themselves, covering pure-exact groups AND singletons — rep_of
-    # covers every record, so no separate singleton pass is needed)
+    rep_labels, rounds = solve(rep_edges)
     expanded = (
         rep_of.join(
             rep_labels.withColumnRenamed("record_id", "rep"), "rep", "left"
@@ -231,6 +219,28 @@ def cluster_matches(matches: DataFrame, names: DataFrame,
         )
     )
     return expanded, rounds
+
+
+def cluster_matches(matches: DataFrame, names: DataFrame,
+                    max_iterations: int = 15,
+                    driver_edge_threshold: int = 1_000_000) -> tuple[DataFrame, int]:
+    """Scored pairs (is_match=true) → clusters(record_id, cluster_id).
+
+    Known exact-duplicate cliques are CONTRACTED before the iterative CC
+    (:func:`_contract_exact`): records sharing a ``match_key`` are provably
+    one component (exact pairs score 1.0), so each group maps to its
+    min-record representative and CC runs only on fuzzy edges BETWEEN
+    representatives. On dup-heavy corpora (the common web case) this
+    shrinks the iterated graph by the duplicate factor and usually saves
+    whole rounds — each round is a fixed-latency barrier, the dominant
+    cluster-stage cost at high parallelism. Final labels expand back
+    through the group map; cluster_id stays the min record_id of the full
+    component (min is preserved: every group rep IS its group's min, and
+    CC labels components by min rep)."""
+    return _contract_exact(
+        matches, names,
+        lambda e: connected_components(e, max_iterations, driver_edge_threshold),
+    )
 
 
 def _driver_pivot_rounds(pairs, max_rounds: int) -> tuple[dict, int]:
@@ -645,42 +655,32 @@ def pivot_matches(
     neighbor of its pivot rep; member records inherit via exact-duplicate
     equivalence. cluster_id is the pivot rep's record_id (deterministic,
     data-dependent — NOT the component minimum, unlike CC labels)."""
-    from company_name_matching_spark.sources.store import materialize
+    return _contract_exact(
+        matches, names, lambda e: pivot_clusters(e, max_rounds)
+    )
 
-    groups = names.groupBy("match_key").agg(F.min("record_id").alias("rep"))
-    # LEFT join + self-coalesce: rep_of covers EVERY record (see
-    # cluster_matches), so the expansion below labels the full record set
-    # and no trailing singleton pass is needed.
-    rep_of = materialize(
-        names.select("record_id", "match_key")
-        .join(groups, "match_key", "left")
-        .select(
-            "record_id",
-            F.coalesce(F.col("rep"), F.col("record_id")).alias("rep"),
-        ),
-        "pivot_repmap",
+
+def _contingency_cells(
+    assignments: DataFrame, record_col: str, pred_col: str, gold_col: str,
+    metric: str,
+) -> DataFrame:
+    """(pred, gold) contingency cells ``(_p, _g, _c)`` — the one shuffle of
+    the assignment table every cluster metric below factors through.
+    Records with a NULL pred or gold are a contract violation and raise
+    (a silent drop would inflate every score)."""
+    a = assignments.select(
+        F.col(record_col).alias("_r"),
+        F.col(pred_col).alias("_p"),
+        F.col(gold_col).alias("_g"),
     )
-    edges = matches.where(F.col("is_match")).select(
-        F.col("left_id").alias("src"), F.col("right_id").alias("dst")
+    a = a.withColumn(
+        "_p",
+        F.when(
+            F.col("_p").isNull() | F.col("_g").isNull(),
+            F.raise_error(F.lit(f"{metric}: NULL cluster or gold label")),
+        ).otherwise(F.col("_p")),
     )
-    l_map = rep_of.select(F.col("record_id").alias("src"), F.col("rep").alias("src_rep"))
-    r_map = rep_of.select(F.col("record_id").alias("dst"), F.col("rep").alias("dst_rep"))
-    rep_edges = (
-        edges.join(l_map, "src").join(r_map, "dst")
-        .where(F.col("src_rep") != F.col("dst_rep"))
-        .select(F.col("src_rep").alias("src"), F.col("dst_rep").alias("dst"))
-    )
-    rep_labels, rounds = pivot_clusters(rep_edges, max_rounds)
-    expanded = (
-        rep_of.join(
-            rep_labels.withColumnRenamed("record_id", "rep"), "rep", "left"
-        )
-        .select(
-            "record_id",
-            F.coalesce(F.col("cluster_id"), F.col("rep")).alias("cluster_id"),
-        )
-    )
-    return expanded, rounds
+    return a.groupBy("_p", "_g").agg(F.count(F.lit(1)).alias("_c"))
 
 
 def bcubed(
@@ -713,19 +713,9 @@ def bcubed(
     operands. Records with a NULL pred or gold are a contract violation
     and raise (a silent drop would inflate both scores).
     """
-    a = assignments.select(
-        F.col(record_col).alias("_r"),
-        F.col(pred_col).alias("_p"),
-        F.col(gold_col).alias("_g"),
+    cells = _contingency_cells(
+        assignments, record_col, pred_col, gold_col, "bcubed"
     )
-    a = a.withColumn(
-        "_p",
-        F.when(
-            F.col("_p").isNull() | F.col("_g").isNull(),
-            F.raise_error(F.lit("bcubed: NULL cluster or gold label")),
-        ).otherwise(F.col("_p")),
-    )
-    cells = a.groupBy("_p", "_g").agg(F.count(F.lit(1)).alias("_c"))
     psz = cells.groupBy("_p").agg(F.sum("_c").alias("_np"))
     gsz = cells.groupBy("_g").agg(F.sum("_c").alias("_ng"))
     contrib = (
@@ -786,19 +776,9 @@ def vmeasure(
     cluster, or all singleton classes) score 1.0 per the reference
     definition. One row out: (n_records, homogeneity, completeness,
     v_measure)."""
-    a = assignments.select(
-        F.col(record_col).alias("_r"),
-        F.col(pred_col).alias("_p"),
-        F.col(gold_col).alias("_g"),
+    cells = _contingency_cells(
+        assignments, record_col, pred_col, gold_col, "vmeasure"
     )
-    a = a.withColumn(
-        "_p",
-        F.when(
-            F.col("_p").isNull() | F.col("_g").isNull(),
-            F.raise_error(F.lit("vmeasure: NULL cluster or gold label")),
-        ).otherwise(F.col("_p")),
-    )
-    cells = a.groupBy("_p", "_g").agg(F.count(F.lit(1)).alias("_c"))
     psz = cells.groupBy("_p").agg(F.sum("_c").alias("_np"))
     gsz = cells.groupBy("_g").agg(F.sum("_c").alias("_ng"))
     tot = cells.agg(F.sum("_c").alias("_n"))
@@ -818,30 +798,9 @@ def vmeasure(
         ).alias(out))
 
     hck = _ent_sum(cells.join(psz, "_p"), "_c", "_np", "s_ck")   # −H(C|K)
-    # H(C) / H(K): denominator is N itself, so these two inline the term
-    hc = (
-        gsz.crossJoin(tot)
-        .select(
-            F.round(
-                (F.col("_ng").cast("double") / F.col("_n"))
-                * F.log(F.col("_ng").cast("double") / F.col("_n")),
-                9,
-            ).cast("decimal(38,9)").alias("_t")
-        )
-        .agg(F.coalesce(F.sum("_t"), F.lit(0).cast("decimal(38,9)")).alias("s_c"))
-    )
+    hc = _ent_sum(gsz, "_ng", "_n", "s_c")                      # −H(C)
     hkc = _ent_sum(cells.join(gsz, "_g"), "_c", "_ng", "s_kc")   # −H(K|C)
-    hk = (
-        psz.crossJoin(tot)
-        .select(
-            F.round(
-                (F.col("_np").cast("double") / F.col("_n"))
-                * F.log(F.col("_np").cast("double") / F.col("_n")),
-                9,
-            ).cast("decimal(38,9)").alias("_t")
-        )
-        .agg(F.coalesce(F.sum("_t"), F.lit(0).cast("decimal(38,9)")).alias("s_k"))
-    )
+    hk = _ent_sum(psz, "_np", "_n", "s_k")                       # −H(K)
     j = tot.crossJoin(hck).crossJoin(hc).crossJoin(hkc).crossJoin(hk)
     h = F.when(F.col("s_c") == 0, F.lit(1.0)).otherwise(
         F.round(
@@ -899,19 +858,9 @@ def rand_scores(
     one-shuffle scale shape as bcubed; NULL labels raise there, and this
     reuses the same guarded input contract by construction.
     """
-    a = assignments.select(
-        F.col(record_col).alias("_r"),
-        F.col(pred_col).alias("_p"),
-        F.col(gold_col).alias("_g"),
+    cells = _contingency_cells(
+        assignments, record_col, pred_col, gold_col, "rand_scores"
     )
-    a = a.withColumn(
-        "_p",
-        F.when(
-            F.col("_p").isNull() | F.col("_g").isNull(),
-            F.raise_error(F.lit("rand_scores: NULL cluster or gold label")),
-        ).otherwise(F.col("_p")),
-    )
-    cells = a.groupBy("_p", "_g").agg(F.count(F.lit(1)).alias("_c"))
 
     def _c2(col):
         return (F.col(col) * (F.col(col) - 1) / 2).cast("long")

@@ -17,7 +17,6 @@ All pairwise channels block first — never an unblocked cross join.
 from __future__ import annotations
 
 import hashlib
-import math
 
 import numpy as np
 import pandas as pd
@@ -749,11 +748,7 @@ def winnow_containment_pairs(
     k: int = 8,
     w: int = 4,
     threshold: float = 0.8,
-    max_fp_df: int | str | None = None,
     hash: str = "arrow",
-    adaptive_quantile: float = 0.999,
-    adaptive_margin: float = 4.0,
-    adaptive_floor: int = 64,
 ) -> DataFrame:
     """Asymmetric boilerplate/passage detection: fingerprint CONTAINMENT
     |A∩B| / min(|A|,|B|) ≥ threshold over winnowing fingerprint sets —
@@ -765,30 +760,9 @@ def winnow_containment_pairs(
     LOSSLESS for any threshold > 0: C ≥ t forces |A∩B| ≥ t·min ≥ t > 0,
     i.e. ≥ 1 shared fingerprint (integers), so every qualifying pair
     shares a bucket. No size-ratio prune exists for containment (that is
-    the point — sizes may differ wildly), so hot fingerprints (corpus-wide
-    boilerplate) are the scale risk: ``max_fp_df`` drops fingerprints
-    shared by more than that many docs (each contributes O(df²) pairs).
-    Capping is a DOCUMENTED recall trade: a pair qualifying only through
-    capped fingerprints is lost — at web scale a fingerprint in >10⁴ docs
-    is template chrome, exactly what you want excluded. ``None`` (default)
-    keeps the join exact, which is what the DuckDB oracle replays.
-
-    ``max_fp_df="adaptive"`` (VERDICT r5 #5) derives the cap from the
-    observed fingerprint-df distribution — the containment analog of
-    ``BlockingConfig.adaptive_cap``:
-
-        cap = max(adaptive_floor,
-                  ceil(approx_percentile(df, adaptive_quantile)
-                       · adaptive_margin))
-
-    A static integer cap is tuning folklore at 100× scale (organic df
-    grows past any fixed number → silent recall collapse); the quantile
-    anchor drops only fingerprints ``margin``× beyond the bulk — true
-    template chrome — so the recall loss is bounded by construction at
-    any corpus size. Costs one bounded aggregation over the inverted
-    index. **At web scale this is the recommended default**; the exact
-    ``None`` default exists so the DuckDB oracle entry replays the join
-    exactly.
+    the point — sizes may differ wildly). The join is exact, which is what
+    the DuckDB oracle replays; hot fingerprints (corpus-wide boilerplate)
+    contribute O(df²) rows each.
 
     Returns (left_id, right_id, containment, n_shared).
     """
@@ -799,71 +773,18 @@ def winnow_containment_pairs(
         "winc_items",
     )
     inv = d.select("id", "bk", F.explode("items").alias("f"))
-    if max_fp_df == "adaptive":
-        # bounded driver scalar: one approximate quantile over per-
-        # fingerprint document frequencies (the same move as blocking's
-        # adaptive_cap — sizes are corpus-bounded, the scalar is O(1))
-        q = (
-            inv.groupBy("bk", "f")
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .agg(F.expr(
-                f"approx_percentile(_c, {adaptive_quantile})"
-            ).alias("q"))
-            .collect()[0]["q"]
-        )
-        max_fp_df = max(
-            int(math.ceil((q or 1) * adaptive_margin)), adaptive_floor
-        )
-    elif isinstance(max_fp_df, str):
-        raise ValueError(
-            f"max_fp_df must be an int, None, or 'adaptive'; got {max_fp_df!r}"
-        )
     pair_rows = (
         inv.alias("l")
         .join(inv.alias("r"), ["bk", "f"])
         .where(F.col("l.id") < F.col("r.id"))
         .select(F.col("l.id").alias("left_id"), F.col("r.id").alias("right_id"))
     )
-    if max_fp_df is None:
-        # the inverted join already yields one row per SHARED fingerprint,
-        # so |A∩B| is a count over it — no fingerprint arrays ever shuffle
-        # to the candidate pairs (r4 review)
-        shared = pair_rows.groupBy("left_id", "right_id").agg(
-            F.count(F.lit(1)).alias("_i")
-        )
-    else:
-        # capped index: counts over it undercount the true |A∩B|, so
-        # verify exactly against the FULL fingerprint sets for the pairs
-        # the capped candidates surface
-        sizes = inv.groupBy("bk", "f").agg(F.count(F.lit(1)).alias("_c"))
-        keep = sizes.where(F.col("_c") <= max_fp_df).select("bk", "f")
-        capped = (
-            inv.join(keep, ["bk", "f"])
-        )
-        cand = (
-            capped.alias("l")
-            .join(capped.alias("r"), ["bk", "f"])
-            .where(F.col("l.id") < F.col("r.id"))
-            .select(
-                F.col("l.id").alias("left_id"),
-                F.col("r.id").alias("right_id"),
-            )
-            .dropDuplicates(["left_id", "right_id"])
-        )
-        shared = (
-            cand.join(
-                d.select(F.col("id").alias("left_id"),
-                         F.col("items").alias("l_it")),
-                "left_id",
-            )
-            .join(
-                d.select(F.col("id").alias("right_id"),
-                         F.col("items").alias("r_it")),
-                "right_id",
-            )
-            .withColumn("_i", F.size(F.array_intersect("l_it", "r_it")))
-            .select("left_id", "right_id", "_i")
-        )
+    # the inverted join already yields one row per SHARED fingerprint,
+    # so |A∩B| is a count over it — no fingerprint arrays ever shuffle
+    # to the candidate pairs
+    shared = pair_rows.groupBy("left_id", "right_id").agg(
+        F.count(F.lit(1)).alias("_i")
+    )
     sizes_n = d.select("id", "n")
     return (
         shared.join(

@@ -96,12 +96,12 @@ def extract_features(binary_df: DataFrame, batch_size: int = 1024,
 
 
 # ---------------------------------------------------------------------------
-# Image / video plumbing with a DETERMINISTIC FAKE decoder.
+# Image plumbing with a DETERMINISTIC FAKE decoder.
 #
 # No image/audio libraries exist in this container, so ``fake_decode_image``
 # derives a 4×4 grayscale "image" from the md5 of the payload — clearly NOT
 # a real codec, but it makes everything DOWNSTREAM of decode (resize via
-# mean-pooling, frame sampling, batch shapes, schema) real numpy code with
+# mean-pooling, batch shapes, schema) real numpy code with
 # real tests and an exact SQL oracle (md5 bytes are reproducible in DuckDB).
 # A production deployment replaces only the decode function (e.g. PIL /
 # torchvision / ffmpeg inside the same mapInPandas iterator).
@@ -112,12 +112,6 @@ IMG_SIDE = 4  # fake images are 4×4 uint8 grayscale (md5 = 16 bytes)
 RESIZE_SCHEMA = (
     "content_id long, height int, width int, pixels array<double>"
 )
-
-FRAMES_SCHEMA = (
-    "content_id long, n_frames int, sampled_idx array<int>, "
-    "frame_means array<double>"
-)
-
 
 def fake_decode_image(payload: bytes) -> "np.ndarray":
     """binary → 4×4 uint8 gray: the 16 md5 bytes of the payload.
@@ -152,29 +146,3 @@ def resize_images(binary_df: DataFrame, out_side: int = 2) -> DataFrame:
             )
 
     return binary_df.mapInPandas(gen, schema=RESIZE_SCHEMA)
-
-
-def sample_frames(binary_df: DataFrame, n_frames: int = 8,
-                  every: int = 3) -> DataFrame:
-    """Treat the payload as a "video" of ``n_frames`` fake frames (frame i =
-    fake image of payload||i) and sample every ``every``-th frame — the
-    frame-sampling plumbing a video pipeline needs, with per-frame mean
-    intensity as the downstream feature."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            idxs, means = [], []
-            for payload in pdf["payload"]:
-                sel = list(range(0, n_frames, every))
-                frames = [
-                    fake_decode_image(bytes(payload or b"") + bytes([i]))
-                    for i in sel
-                ]
-                idxs.append(sel)
-                means.append([round(float(f.mean()), 6) for f in frames])
-            yield pd.DataFrame(
-                {"content_id": pdf["content_id"], "n_frames": n_frames,
-                 "sampled_idx": idxs, "frame_means": means}
-            )
-
-    return binary_df.mapInPandas(gen, schema=FRAMES_SCHEMA)

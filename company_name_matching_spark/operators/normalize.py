@@ -192,36 +192,3 @@ def group_original_names(
             F.sort_array(F.flatten(F.collect_list("_part"))), 1, cap
         ).alias("original_names")
     )
-
-
-def dedup_exact(
-    names: DataFrame, keep: str = "longest", collect_names: int = 0
-) -> DataFrame:
-    """Exact dedup by ``norm_key`` with the reference's window semantics
-    (``stage2_deduplicate.py:79-99``) but a deterministic tiebreaker
-    (``xxhash64(name)`` instead of ``monotonically_increasing_id``).
-
-    Returns one canonical row per norm_key plus group metadata. With
-    ``collect_names > 0``, attaches the reference's ``original_names`` audit
-    column (capped, sorted) via the salted two-phase aggregation.
-    """
-    from pyspark.sql.window import Window
-
-    if keep == "longest":
-        order = [F.length("name").desc(), F.xxhash64("name").asc()]
-    else:  # "first" → deterministic stand-in: smallest record hash
-        order = [F.xxhash64("name").asc()]
-    w = Window.partitionBy("norm_key").orderBy(*order)
-    grp = Window.partitionBy("norm_key")
-    out = (
-        names.withColumn("_rn", F.row_number().over(w))
-        .withColumn("duplicate_group_size", F.count(F.lit(1)).over(grp))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-        .withColumn("is_duplicate", F.col("duplicate_group_size") > 1)
-    )
-    if collect_names > 0:
-        out = out.join(
-            group_original_names(names, cap=collect_names), "norm_key", "left"
-        )
-    return out

@@ -5,9 +5,11 @@ Checkpointing model (distributed version of the reference's stage metrics +
 skip_stages orchestrator, ``orchestrator.py:89-257`` / ``utils/metrics.py``):
 
 * every stage writes its output table under ``<checkpoint_dir>/<stage>/``
-  plus a ``_COMPLETE.json`` marker (rows, elapsed, throughput);
+  plus a ``_COMPLETE.json`` marker (rows, elapsed, throughput, per-file
+  rows, and ``facts``: what the stage computed besides its table, e.g. the
+  cluster stage's ``cc_rounds``);
 * on re-run, a stage whose marker exists is *read back*, not recomputed —
-  resume-from-checkpoint mid-pipeline;
+  resume-from-checkpoint mid-pipeline — and reports the marker's facts;
 * a ``metrics`` table accumulates one row per (run, stage) with the row
   count and throughput; its ``partitions_json`` lists the row count of each
   parquet file the stage wrote, in part-file order — the per-partition
@@ -114,11 +116,19 @@ class _Checkpointer:
         return bool(self.root) and (self._dir(stage) / "_COMPLETE.json").exists()
 
     def run(self, stage: str, fn) -> DataFrame:
-        """Compute-or-restore a stage; record metrics either way."""
+        """Compute-or-restore a stage; record metrics either way.
+
+        ``fn`` returns the stage's frame, or ``(frame, facts)`` with a
+        JSON-able ``facts`` dict that the marker keeps, so a resumed stage
+        reports the facts of the run that computed it."""
         t0 = time.monotonic()
         resumed = self.has(stage)
         data = str(self._dir(stage) / "data") if self.root else None
         if resumed:
+            marker = json.loads(
+                (self._dir(stage) / "_COMPLETE.json").read_text(encoding="utf-8")
+            )
+            facts = marker.get("facts", {})
             # the schema the stage's write left in its footers: reading with
             # it runs no schema-inference job
             reader, schema = self.spark.read, _footer_schema(data)
@@ -132,7 +142,9 @@ class _Checkpointer:
             # (without a barrier every consumer recomputes the lineage), and
             # .persist() is NOT a substitute — the in-memory cache scan
             # contends badly at high thread counts (see sources/store.py)
-            df = store.materialize(fn(), stage, path=data)
+            out = fn()
+            df, facts = out if isinstance(out, tuple) else (out, {})
+            df = store.materialize(df, stage, path=data)
         rows, parts = store._written_rows(df)
         elapsed = 0.0 if resumed else time.monotonic() - t0
         entry = {
@@ -143,6 +155,7 @@ class _Checkpointer:
             "elapsed_s": round(elapsed, 4),
             "rows_per_s": round(rows / elapsed, 2) if elapsed > 0 else None,
             "partitions": parts,
+            "facts": facts,
         }
         self.metrics.append(entry)
         if data and not resumed:
@@ -193,20 +206,18 @@ def run_pipeline(
 
     matches = ck.run("score", _score)
 
-    cc_rounds = 0
-
     def _cluster():
-        nonlocal cc_rounds
         if cfg.cluster_method == "pivot":
-            clusters, cc_rounds = clustering.pivot_matches(matches, names)
+            clusters, rounds = clustering.pivot_matches(matches, names)
         else:
-            clusters, cc_rounds = clustering.cluster_matches(
+            clusters, rounds = clustering.cluster_matches(
                 matches, names, cfg.max_cc_iterations,
                 cfg.cc_driver_edge_threshold,
             )
-        return clusters
+        return clusters, {"cc_rounds": rounds}
 
     clusters = ck.run("cluster", _cluster)
+    cc_rounds = ck.metrics[-1]["facts"].get("cc_rounds", 0)
     golden = None
     if cfg.emit_golden:
         golden = ck.run(

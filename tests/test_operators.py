@@ -37,26 +37,6 @@ def test_normalize_entity_type_native_matches_pandas(spark):
     assert got == [w if w is not None else None for w in want]
 
 
-def test_dedup_exact_keeps_longest(spark):
-    import datetime as dt
-
-    # u1/u2 share a norm_key (differ only in case/diacritics/padding);
-    # norm_key deliberately keeps special chars (reference-UDF parity), so
-    # punctuation differences would be different keys.
-    rows = [
-        ("u1", dt.datetime(2026, 1, 1), b"x", "CÔNG TY TNHH SỮA VIỆT NAM  ", "vi", "e", "k"),
-        ("u2", dt.datetime(2026, 1, 1), b"x", "cong ty tnhh sua viet nam", "vi", "e", "k"),
-        ("u3", dt.datetime(2026, 1, 1), b"x", "CP KHÁC BIỆT", "vi", "e", "k"),
-    ]
-    pages = spark.createDataFrame(rows, fixtures.PAGES_SCHEMA)
-    names = normalize.normalize_pages(pages)
-    out = normalize.dedup_exact(names, keep="longest")
-    grp = {r["norm_key"]: r for r in out.collect()}
-    dup = [r for r in grp.values() if r["duplicate_group_size"] == 2]
-    assert len(dup) == 1 and dup[0]["is_duplicate"]
-    assert len(dup[0]["name"]) == max(len(rows[0][3]), len(rows[1][3]))
-
-
 def test_group_original_names_salted_cap_deterministic(spark):
     """A hot group bigger than the cap: the salted two-phase aggregation
     must return exactly the lexicographically smallest `cap` names (i.e.
@@ -72,23 +52,6 @@ def test_group_original_names_salted_cap_deterministic(spark):
         }
         assert out["k"] == sorted(f"name{i:03d}" for i in range(250))[:100]
         assert out["k2"] == ["solo"]
-
-
-def test_dedup_exact_collect_names(spark):
-    import datetime as dt
-
-    rows = [
-        ("u1", dt.datetime(2026, 1, 1), b"x", "CÔNG TY TNHH SỮA VIỆT NAM  ", "vi", "e", "k"),
-        ("u2", dt.datetime(2026, 1, 1), b"x", "cong ty tnhh sua viet nam", "vi", "e", "k"),
-        ("u3", dt.datetime(2026, 1, 1), b"x", "CP KHÁC BIỆT", "vi", "e", "k"),
-    ]
-    names = normalize.normalize_pages(
-        spark.createDataFrame(rows, fixtures.PAGES_SCHEMA)
-    )
-    out = normalize.dedup_exact(names, keep="longest", collect_names=10)
-    dup = [r for r in out.collect() if r["is_duplicate"]]
-    assert len(dup) == 1
-    assert dup[0]["original_names"] == sorted([rows[0][3], rows[1][3]])
 
 
 def test_blocking_variants_share_block(spark):
@@ -318,7 +281,6 @@ def test_candidate_pairs_key_contraction_equals_record_level(spark):
 
     for cfg in (
         blocking.BlockingConfig(max_block_size=20),
-        blocking.BlockingConfig(adaptive_cap=True, adaptive_cap_floor=8),
         blocking.BlockingConfig(channels=("prefix", "lsh", "token"),
                                 max_block_size=25),
     ):
@@ -368,14 +330,11 @@ def test_generate_blocks_rejects_unknown_channels(spark):
 
 
 def test_adaptive_block_cap_tracks_distribution(spark):
-    """Data-driven hot-block cap (VERDICT r3 #9): at 100x scale ORGANIC
-    blocks outgrow any fixed max_block_size and a static cap silently drops
-    their pairs; the adaptive cap (p-quantile x margin of the observed
-    size distribution) keeps them while still dropping true skew outliers
-    margin-fold beyond the quantile."""
-    # body: 50 blocks of size ~4 (organic); one legit large block of 300
-    # records (organically grown with the corpus); one pathological block
-    # of 5000 (a degenerate key)
+    """The static hot-block cap: a block above ``max_block_size`` is
+    dropped with its pairs, every block at or below it is kept, and
+    singletons go (they form no pairs)."""
+    # body: 50 blocks of size 4; one large block of 300 records; one
+    # pathological block of 5000 (a degenerate key); one singleton
     rows = []
     for b in range(50):
         for i in range(4):
@@ -384,43 +343,25 @@ def test_adaptive_block_cap_tracks_distribution(spark):
         rows.append((f"L_{i}", "k:organic"))
     for i in range(5000):
         rows.append((f"H_{i}", "k:patho"))
+    rows.append(("S_0", "k:single"))
     blocks = spark.createDataFrame(rows, "record_id string, block_key string")
 
-    # static default (200): the organic 300-block is LOST with its pairs
+    # static default (200): the 300-block and the 5000-block are dropped
     static_keys = {
         r["block_key"]
         for r in blocking.filter_blocks(
             blocks, blocking.BlockingConfig()
         ).select("block_key").distinct().collect()
     }
-    assert "k:organic" not in static_keys
-
-    # adaptive: p99.9 over {50 x 4, 300, 5000} lands at the tail (5000);
-    # use p0.98 so the quantile sits in the body (size 4-300) -- cap =
-    # ceil(q x 4) keeps the 300-block, drops the 5000 outlier
-    cfg = blocking.BlockingConfig(
-        adaptive_cap=True, adaptive_cap_quantile=0.98,
-        adaptive_cap_margin=4.0, adaptive_cap_floor=64,
-    )
-    adaptive_keys = {
+    assert static_keys == {f"k:body{b}" for b in range(50)}
+    # the cap is inclusive: at 300 the large block survives, 5000 does not
+    raised = {
         r["block_key"]
-        for r in blocking.filter_blocks(blocks, cfg)
-        .select("block_key").distinct().collect()
+        for r in blocking.filter_blocks(
+            blocks, blocking.BlockingConfig(max_block_size=300)
+        ).select("block_key").distinct().collect()
     }
-    assert "k:organic" in adaptive_keys, adaptive_keys
-    assert "k:patho" not in adaptive_keys
-    assert all(k.startswith("k:body") or k == "k:organic" for k in adaptive_keys)
-    # floor guards degenerate distributions (all-tiny blocks): cap never
-    # drops below adaptive_cap_floor
-    tiny = spark.createDataFrame(
-        [(f"t{i}", f"k:{i % 30}") for i in range(60)],
-        "record_id string, block_key string",
-    )
-    cfg_floor = blocking.BlockingConfig(
-        adaptive_cap=True, adaptive_cap_floor=64
-    )
-    kept = blocking.filter_blocks(tiny, cfg_floor).count()
-    assert kept == 60  # all size-2 blocks kept under the floor
+    assert raised == static_keys | {"k:organic"}
 
 
 def test_failure_records_tie_and_suppression(spark):

@@ -98,8 +98,11 @@ def test_sibling_legal_forms_stay_separate(spark):
 def test_checkpoint_resume(spark, tmp_path):
     pages = fixtures.pages_dataframe(spark, n_companies=30, per_company=3)
     ck = str(tmp_path / "ck")
-    res1 = run_pipeline(spark, pages, checkpoint_dir=ck)
+    # the distributed CC path, so the cluster stage runs > 0 rounds
+    cfg = PipelineConfig(cc_driver_edge_threshold=0)
+    res1 = run_pipeline(spark, pages, checkpoint_dir=ck, cfg=cfg)
     assert all(not m["resumed"] for m in res1.metrics)
+    assert res1.cc_rounds > 0
     # markers + metrics written
     assert (tmp_path / "ck" / "normalize" / "_COMPLETE.json").exists()
     meta = json.loads((tmp_path / "ck" / "score" / "_COMPLETE.json").read_text())
@@ -112,7 +115,7 @@ def test_checkpoint_resume(spark, tmp_path):
     group = "test-checkpoint-resume"
     sc.setJobGroup(group, group)
     try:
-        res2 = run_pipeline(spark, pages, checkpoint_dir=ck)
+        res2 = run_pipeline(spark, pages, checkpoint_dir=ck, cfg=cfg)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -120,6 +123,8 @@ def test_checkpoint_resume(spark, tmp_path):
     assert all(m["resumed"] for m in res2.metrics)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) == 0, sorted(jobs)
+    # the round count comes back from the cluster stage's marker
+    assert res2.cc_rounds == res1.cc_rounds
     assert (
         res1.clusters.exceptAll(res2.clusters).count() == 0
         and res2.clusters.exceptAll(res1.clusters).count() == 0
@@ -143,10 +148,11 @@ def test_checkpoint_resume(spark, tmp_path):
 
     # partial resume: delete the last stage marker → only it recomputes
     (tmp_path / "ck" / "cluster" / "_COMPLETE.json").unlink()
-    res3 = run_pipeline(spark, pages, checkpoint_dir=ck)
+    res3 = run_pipeline(spark, pages, checkpoint_dir=ck, cfg=cfg)
     by_stage = {m["stage"]: m["resumed"] for m in res3.metrics}
     assert by_stage["normalize"] and by_stage["pairs"] and by_stage["score"]
     assert not by_stage["cluster"]
+    assert res3.cc_rounds == res1.cc_rounds
 
     # metrics table accumulated rows for all runs, with per-file lineage
     metrics = spark.read.parquet(str(tmp_path / "ck" / "metrics"))
@@ -158,13 +164,18 @@ def test_checkpoint_resume(spark, tmp_path):
 
 
 # Edge partitions a 100-TB run WILL hit: empty input, a single record, an
-# all-identical corpus, and rows that fail every validation filter — name →
-# (rows, want_clusters, want_matches).
+# all-identical corpus, one hot key whose every block weighs more than
+# max_block_size=200 (blocking drops them all, so there are no pairs, and
+# the exact-key contraction alone unites the records), and rows that fail
+# every validation filter — name → (rows, want_clusters, want_matches).
 DEGENERATE_CASES = {
     "empty": ([], 0, 0),
     "single": ([("u1", "CÔNG TY TNHH MỘT MÌNH")], 1, 0),
     "identical": (
         [(f"u{i}", "CÔNG TY TNHH GIỐNG NHAU") for i in range(5)], 1, 10
+    ),
+    "hot_block": (
+        [(f"u{i}", "CÔNG TY TNHH NÓNG") for i in range(250)], 1, 0
     ),
     "all_invalid": ([("u1", ""), ("u2", "##$%"), ("u3", "ab")], 0, 0),
 }
