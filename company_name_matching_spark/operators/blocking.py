@@ -66,6 +66,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from company_name_matching_spark.sources.store import materialize, spread
+
 _MERSENNE31 = 2147483647  # 2^31 - 1, prime
 
 
@@ -313,12 +315,15 @@ def explode_staged(
 
 def filter_blocks(
     blocks: DataFrame,
-    cfg: BlockingConfig,
+    max_size: int,
     min_size: int = 2,
     weight_col: str | None = None,
 ) -> DataFrame:
-    """Drop singleton blocks (no pairs) and oversized hot blocks (pair-explosion
-    cap — the explicit skew-splitting response the reference lacks).
+    """Drop singleton blocks (no pairs) and hot blocks above ``max_size``
+    (pair-explosion cap — the explicit skew-splitting response the reference
+    lacks). The one hot-bucket cap of every candidate generator: name
+    blocking passes ``BlockingConfig.max_block_size``, the dedup bucket
+    joins ``dedup.MAX_BUCKET_SIZE``. ``blocks`` is keyed by ``block_key``.
 
     ``min_size=2`` is for self-join dedup; query-vs-corpus search must pass
     ``min_size=1`` (a corpus block of one is still a valid search target).
@@ -348,7 +353,7 @@ def filter_blocks(
     sizes = blocks.groupBy("block_key").agg(size_expr.alias("_bsz"))
     keep = sizes.where(
         (F.col("_bsz") >= min_size)
-        & (F.col("_bsz") <= F.lit(cfg.max_block_size))
+        & (F.col("_bsz") <= F.lit(max_size))
     ).select("block_key")
     return blocks.join(keep, "block_key")
 
@@ -365,6 +370,17 @@ def _pair_expand(df: DataFrame, ids_col: str, left: str, right: str) -> DataFram
         ).alias("_rest"),
     )
     return anchors.select(left, F.explode("_rest").alias(right))
+
+
+def _block_pairs(blocks: DataFrame, left: str, right: str) -> DataFrame:
+    """blocks(record_id, block_key) → one (left < right) row per pair per
+    shared block: each block's sorted member set, spread before the fan-out
+    (:func:`sources.store.spread`), expanded by :func:`_pair_expand`. Pairs
+    that share several blocks repeat; the caller dedups or counts them."""
+    grp = blocks.groupBy("block_key").agg(
+        F.sort_array(F.collect_set("record_id")).alias("_ids")
+    )
+    return _pair_expand(spread(grp), "_ids", left, right)
 
 
 def candidate_pairs_record_level(
@@ -386,24 +402,16 @@ def candidate_pairs_record_level(
     makes left < right by construction.
     """
     cfg = cfg or BlockingConfig()
-    from company_name_matching_spark.sources.store import materialize
-
     # materialize the generated blocks once: filter_blocks consumes them
     # twice (size aggregation + keep-join), and without a barrier both
     # consumers would recompute the MinHash signature expressions — the
     # expensive narrow stage (measured +80% on the pairs stage)
     blocks = filter_blocks(
-        materialize(generate_blocks(names, cfg), "blocks"), cfg
+        materialize(generate_blocks(names, cfg), "blocks"), cfg.max_block_size
     )
-    grp = blocks.groupBy("block_key").agg(
-        F.sort_array(F.collect_set("record_id")).alias("_ids")
+    return _block_pairs(blocks, "left_id", "right_id").dropDuplicates(
+        ["left_id", "right_id"]
     )
-    # pre-fan-out spread (see candidate_pairs): a tiny aggregated block
-    # table serializes the whole expansion + map-side dedup otherwise
-    n_part = int(names.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return _pair_expand(
-        grp.repartition(n_part), "_ids", "left_id", "right_id"
-    ).dropDuplicates(["left_id", "right_id"])
 
 
 def candidate_pairs(
@@ -443,8 +451,6 @@ def candidate_pairs(
     on randomized corpora.
     """
     cfg = cfg or BlockingConfig()
-    from company_name_matching_spark.sources.store import materialize
-
     # 1. per-key member counts (no arrays yet — see scale guard (1))
     key_n = names.groupBy("match_key").agg(F.count(F.lit(1)).alias("_n"))
     key_names = key_n.select(
@@ -459,7 +465,7 @@ def candidate_pairs(
         materialize(
             generate_blocks(key_names, cfg, passthrough=("_n",)), "key_blocks"
         ),
-        cfg,
+        cfg.max_block_size,
         weight_col="_n",
     )
     # 3. member arrays only for surviving keys (bounded by the cap)
@@ -473,30 +479,13 @@ def candidate_pairs(
         "key_members",
     )
     # 4. distinct co-blocked key pairs (the ONLY dedup shuffle left, on the
-    #    contracted domain; sorted set gives _lk < _rk across all blocks)
-    grp = blocks.groupBy("block_key").agg(
-        F.sort_array(F.collect_set("record_id")).alias("_keys")
-    )
-    # Pre-fanout repartition (both expansions below): the key tables are
-    # tiny, so AQE coalesces their shuffles to ~1-2 partitions — and joins/
-    # explodes PRESERVE partitioning, so without this the multi-million-row
-    # record-pair output (and its checkpoint parquet) would land in those
-    # same 1-2 partitions, serializing every downstream map-side phase
-    # (measured: score stage flat ~19 s at local[2/8/32]). Round-robin over
-    # the session's shuffle width shuffles only the ~10³-10⁵ KEY rows, never
-    # the expanded pairs; per-row fan-out is cap-bounded, so row-count
-    # balance ≈ output balance.
-    n_part = int(names.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # grp is ALSO repartitioned pre-expansion: its aggregation output is a
-    # handful of block rows that AQE coalesces to 1-2 partitions, and
-    # explode preserves partitioning — without the spread the key-pair
-    # expansion AND the dedup's map-side partial aggregation run serially
-    # (the post-dedup repartition below only fixed the stages after the
-    # dedup exchange). Shuffles only key rows, never expanded pairs.
-    key_pairs = (
-        _pair_expand(grp.repartition(n_part), "_keys", "_lk", "_rk")
-        .dropDuplicates(["_lk", "_rk"])
-        .repartition(n_part)
+    #    contracted domain; sorted set gives _lk < _rk across all blocks).
+    #    The deduped key pairs are spread again before the member-array
+    #    expansion below (the score stage ran flat ~19 s at local[2/8/32]
+    #    when the record pairs inherited the dedup's coalesced width);
+    #    per-row fan-out is cap-bounded, so row balance ≈ output balance.
+    key_pairs = spread(
+        _block_pairs(blocks, "_lk", "_rk").dropDuplicates(["_lk", "_rk"])
     )
     # 5. cross-key record pairs: expand both member arrays; record ids from
     #    different keys are distinct, least/greatest restores left < right.
@@ -525,7 +514,7 @@ def candidate_pairs(
     # 6. within-key pairs: every surviving key's own members (identical
     #    block memberships → they co-occur in each of its surviving blocks)
     within = _pair_expand(
-        members.where(F.size("_members") >= 2).repartition(n_part),
+        spread(members.where(F.size("_members") >= 2)),
         "_members",
         "left_id",
         "right_id",
@@ -547,23 +536,12 @@ def pair_block_weights(
     block cap); None runs exact (every block participates), the oracle
     configuration."""
     if cfg is not None:
-        from company_name_matching_spark.sources.store import materialize
-
-        blocks = filter_blocks(materialize(blocks, "mb_blocks"), cfg)
-    grp = blocks.groupBy("block_key").agg(
-        F.sort_array(F.collect_set("record_id")).alias("_ids")
-    )
-    # pre-fan-out spread (same rationale as candidate_pairs): the aggregated
-    # block table is a handful of rows, AQE coalesces its exchange to 1-2
-    # partitions, and explode PRESERVES partitioning — so the O(Σ|block|²)
-    # pair expansion plus the weight agg's map-side partial aggregation
-    # would run serially. Round-robin here shuffles only the block rows
-    # (bytes ≈ the membership arrays the expansion reads anyway), never the
-    # expanded pairs.
-    n_part = int(blocks.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return _pair_expand(
-        grp.repartition(n_part), "_ids", "left_id", "right_id"
-    ).groupBy("left_id", "right_id").agg(F.count(F.lit(1)).alias("weight"))
+        blocks = filter_blocks(
+            materialize(blocks, "mb_blocks"), cfg.max_block_size
+        )
+    return _block_pairs(blocks, "left_id", "right_id").groupBy(
+        "left_id", "right_id"
+    ).agg(F.count(F.lit(1)).alias("weight"))
 
 
 def metablock_prune(
@@ -587,8 +565,6 @@ def metablock_prune(
     Everything is key-partitioned; per-node state is two longs.
     Output: (left_id, right_id, weight) — the surviving comparisons.
     """
-    from company_name_matching_spark.sources.store import materialize
-
     w = materialize(pair_block_weights(blocks, cfg), "mb_weights")
     ends = w.select(F.col("left_id").alias("_id"), "weight").unionByName(
         w.select(F.col("right_id").alias("_id"), "weight")

@@ -28,6 +28,14 @@ from pyspark.sql.window import Window
 from company_name_matching_spark.functions import textstats
 from company_name_matching_spark.operators import blocking
 
+# hot-bucket cap of the SimHash and embedding-LSH bucket self-joins
+# (``blocking.filter_blocks``). A degenerate population — empty texts all
+# hashing to signature 0, zero vectors sharing one sign bucket — would
+# otherwise make the self-join O(n²) on that bucket; dropping a capped
+# bucket trades its pairs for survival. The cap sits far above any honest
+# near-dup bucket, so ordinary outputs are unaffected.
+MAX_BUCKET_SIZE = 100_000
+
 
 def exact_groups(docs: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text") -> DataFrame:
@@ -302,28 +310,16 @@ def _ppjoin_exact_jaccard(d: DataFrame, threshold: float, tag: str,
             F.col("l.n") - F.col("l._p"), F.col("r.n") - F.col("r._p")
         ) + F.lit(1)
     )
-    # probe-side fan-out spread: the materialized prefix table is small at
-    # bench scale (1-2 parquet splits), the build side broadcasts, and the
-    # join output below is orders of magnitude larger than its probe input —
-    # without this the whole candidate explosion plus the dedup's map-side
-    # partial aggregation runs in 1-2 tasks (measured 14.3 s → 2.6 s on the
-    # identical 18M-row sf0.1 part join). No-op when the scan is already at
-    # least shuffle-width partitions (the at-scale case).
-    from company_name_matching_spark.sources.store import fanout_repartition
+    # the probe side is spread before the candidate join: its output is
+    # orders of magnitude larger than the small prefix barrier it reads
+    from company_name_matching_spark.sources.store import spread
 
-    probe = fanout_repartition(prefix)
     cand = (
-        probe.alias("l")
+        spread(prefix).alias("l")
         .join(prefix.alias("r"), ["bk", "tok"])
         .where(
             (F.col("l.id") < F.col("r.id"))
-            & (
-                # -1e-9: lossless-guard convention (t*max can round an
-                # ulp above the exact integer and drop a J==t boundary pair)
-                F.least(F.col("l.n"), F.col("r.n")).cast("double")
-                >= F.lit(threshold) * F.greatest(F.col("l.n"), F.col("r.n"))
-                - F.lit(1e-9)
-            )
+            & _size_ratio_ok(F.col("l.n"), F.col("r.n"), threshold)
             & (upper >= alpha)
         )
         .select(F.col("l.id").alias("left_id"), F.col("r.id").alias("right_id"))
@@ -500,15 +496,15 @@ def minhash_pairs(
     )
     # materialize: the size-agg + keep-join of filter_blocks feeds both
     # sides of the candidate self-join AND the verify-id pruning
-    bands = materialize(blocking.filter_blocks(bands, cfg), "mh_bands")
-    # probe-side fan-out spread (same serialization hazard as the PPJoin
-    # candidate join — see _ppjoin_exact_jaccard): the bands table is tiny
-    # after materialization, the build side broadcasts, and the bucket
-    # self-join output would otherwise be produced by 1-2 tasks
-    from company_name_matching_spark.sources.store import fanout_repartition
+    bands = materialize(
+        blocking.filter_blocks(bands, cfg.max_block_size), "mh_bands"
+    )
+    # probe side spread before the bucket self-join (as in the PPJoin
+    # candidate join)
+    from company_name_matching_spark.sources.store import spread
 
     cand = (
-        fanout_repartition(bands).alias("l")
+        spread(bands).alias("l")
         .join(bands.alias("r"), "block_key")
         .where(F.col("l.record_id") < F.col("r.record_id"))
         .select(
@@ -562,42 +558,21 @@ def _simhash_udf(text: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def _cap_buckets(
-    b: DataFrame, key_col: str, max_bucket_size: int | None
-) -> DataFrame:
-    """Drop pathologically hot buckets before a bucket self-join (streaming
-    groupBy + unhinted equi-join, the same AQE-splittable shape as
-    ``blocking.filter_blocks``). A degenerate population — empty texts all
-    hashing to signature 0, zero vectors sharing one sign bucket — would
-    otherwise make the self-join O(n²) on that bucket. Dropping a capped
-    bucket trades its pairs for survival; the defaults sit far above any
-    honest near-dup bucket, so ordinary outputs are unaffected."""
-    if not max_bucket_size:
-        return b
-    sizes = b.groupBy(key_col).agg(F.count(F.lit(1)).alias("_bsz"))
-    keep = sizes.where(F.col("_bsz") <= F.lit(max_bucket_size)).select(key_col)
-    return b.join(keep, key_col)
-
-
 def simhash_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    n_bands: int = 4,
-    max_bucket_size: int | None = 100_000,
 ) -> DataFrame:
-    """SimHash near-dup: band the 64-bit signature into n_bands 16-bit chunks
-    (any pair within hamming ≤ n_bands-1 shares ≥1 exact chunk), bucket-join,
-    verify true hamming distance with bit_count(xor)."""
+    """SimHash near-dup: band the 64-bit signature into n_bands chunks
+    (any pair within hamming ≤ n_bands-1 shares ≥1 exact chunk), bucket-join
+    (buckets capped at ``MAX_BUCKET_SIZE``), verify true hamming distance
+    with bit_count(xor). n_bands is the smallest 64-divisor ≥ 4 above
+    ``max_hamming`` — fewer bands would let a pair inside the radius differ
+    in every chunk and silently vanish from the candidates."""
     if max_hamming > 63:
         raise ValueError("max_hamming must be < 64 (the signature width)")
-    if max_hamming > n_bands - 1:
-        # the pigeonhole guarantee only covers hamming <= n_bands-1 — with
-        # too few bands a pair inside the requested radius can differ in
-        # every chunk and silently vanish from the candidates. Auto-raise
-        # to the smallest 64-divisor band count that covers the radius.
-        n_bands = next(b for b in (1, 2, 4, 8, 16, 32, 64) if b > max_hamming)
+    n_bands = next(b for b in (4, 8, 16, 32, 64) if b > max_hamming)
     from company_name_matching_spark.sources.store import materialize
 
     # one UDF pass: the signature table feeds the cap's size-agg, the keep
@@ -621,12 +596,13 @@ def simhash_pairs(
             for i in range(n_bands)
         ]
     )
-    b = _cap_buckets(
-        d.select("id", "sh", F.explode(chunks).alias("bk")), "bk", max_bucket_size
+    b = blocking.filter_blocks(
+        d.select("id", "sh", F.explode(chunks).alias("block_key")),
+        MAX_BUCKET_SIZE,
     )
     pairs = (
         b.alias("l")
-        .join(b.alias("r"), "bk")
+        .join(b.alias("r"), "block_key")
         .where(F.col("l.id") < F.col("r.id"))
         .select(
             F.col("l.id").alias("left_id"),
@@ -684,7 +660,6 @@ def embedding_neardup_pairs_lsh(
     dim: int = 64,
     n_planes: int = 8,
     n_tables: int = 4,
-    max_bucket_size: int | None = 100_000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicates with sign-LSH blocking — the scale
     path. Replaces the round-2 ``block_col="label"`` wiring (a
@@ -723,14 +698,16 @@ def embedding_neardup_pairs_lsh(
     # degenerate case the expectation bound ignores (e.g. zero vectors all
     # landing in one all-ones sign bucket → O(n²) on that bucket).
     b = materialize(
-        blocking.explode_staged(keyed, "_keys", "bucket", "id", "v"),
+        blocking.explode_staged(keyed, "_keys", "block_key", "id", "v"),
         "emb_lsh_buckets",
     )
-    b = _cap_buckets(b, "bucket", max_bucket_size)
-    l = b.select(F.col("id").alias("left_id"), F.col("v").alias("l_v"), "bucket")
-    r = b.select(F.col("id").alias("right_id"), F.col("v").alias("r_v"), "bucket")
+    b = blocking.filter_blocks(b, MAX_BUCKET_SIZE)
+    l = b.select(F.col("id").alias("left_id"), F.col("v").alias("l_v"),
+                 "block_key")
+    r = b.select(F.col("id").alias("right_id"), F.col("v").alias("r_v"),
+                 "block_key")
     return (
-        l.join(r, "bucket")
+        l.join(r, "block_key")
         .where(F.col("left_id") < F.col("right_id"))
         .select("left_id", "right_id", "l_v", "r_v")
         .dropDuplicates(["left_id", "right_id"])

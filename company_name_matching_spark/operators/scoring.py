@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from company_name_matching_spark.functions import similarity
+from company_name_matching_spark.sources.store import spread
 
 
 @dataclass
@@ -402,9 +403,10 @@ def score_pairs(
 ) -> DataFrame:
     """pairs(left_id, right_id) × names features → scored pairs with
     ``is_match``. ``names`` is the normalize-stage output (record_id,
-    match_key, tokens, entity_type, has_repeat); ``idf`` defaults to
-    :func:`build_idf` over ``names``. With ``idf`` given (or both vector
-    weights zero) the call is lazy: it launches no Spark job.
+    match_key, entity_type, has_repeat); its tokens are not read but taken
+    as ``split(match_key, " ")``, as normalize builds them. ``idf``
+    defaults to :func:`build_idf` over ``names``. With ``idf`` given (or
+    both vector weights zero) the call is lazy: it launches no Spark job.
 
     Two-tier plan:
 
@@ -413,8 +415,8 @@ def score_pairs(
        a dedup-heavy workload — are decided right there (score 1.0) and
        never reach the kernels;
     2. the fuzzy remainder is deduplicated to DISTINCT oriented key pairs,
-       which take their key strings and token sets from the distinct-key
-       table and cross into ONE Arrow pair UDF (cosine + Jaro-Winkler) —
+       which take their key strings from the distinct-key table and
+       cross into ONE Arrow pair UDF (cosine + Jaro-Winkler) —
        kernel cost scales with unique name pairs, not page pairs. The
        results join back to the record pairs, where the record-level rules
        (repeat penalty, entity conflict, threshold) apply.
@@ -457,31 +459,32 @@ def score_pairs(
     # canonicalization) so every float matches the per-pair computation
     # bit-for-bit.
     k = fuzzy.select("l_key_id", "r_key_id").dropDuplicates()
+    # the distinct-key table deduplicates the key string alone (a hash
+    # aggregate; carrying the tokens array would force a sort aggregate)
+    # and re-derives the tokens after the joins
     keys = (
-        names.select("match_key", "tokens")
-        .dropDuplicates(["match_key"])
+        names.select("match_key")
+        .dropDuplicates()
         .withColumn("key_id", F.xxhash64("match_key"))
     )
     if need_vectors:
-        # AQE coalesces the small distinct key-pair exchange into one
-        # partition, which would run the pair UDF in one task; it never
-        # coalesces a repartition by number. Spreading the id pairs before
-        # the key joins shuffles two longs a row, not the key strings.
-        k = k.repartition(
-            int(names.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        )
+        # spread the id pairs before the key joins, so the pair UDF does not
+        # run in the one task the coalesced key-pair exchange would give it;
+        # the spread shuffles two longs a row, not the key strings
+        k = spread(k)
     for side in ("l", "r"):
         k = k.join(
             keys.select(
                 F.col("key_id").alias(f"{side}_key_id"),
                 F.col("match_key").alias(f"{side}h_match_key"),
-                F.col("tokens").alias(f"{side}h_tokens"),
             ),
             f"{side}_key_id",
         )
 
-    inter = F.size(F.array_intersect("lh_tokens", "rh_tokens"))
-    union = F.size(F.array_union("lh_tokens", "rh_tokens"))
+    l_tokens = F.split("lh_match_key", " ")
+    r_tokens = F.split("rh_match_key", " ")
+    inter = F.size(F.array_intersect(l_tokens, r_tokens))
+    union = F.size(F.array_union(l_tokens, r_tokens))
     k = k.withColumn(
         "jaccard",
         F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(0.0),

@@ -150,7 +150,7 @@ def search_topk(
     # blocks twice, and the MinHash signature generation must not run twice
     cb = blocking.filter_blocks(
         materialize(blocking.generate_blocks(c, cfg.blocking), "search_cblocks"),
-        cfg.blocking, min_size=1,
+        cfg.blocking.max_block_size, min_size=1,
     )
     qb = blocking.generate_blocks(q, cfg.blocking)
     cand = (

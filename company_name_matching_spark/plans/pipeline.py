@@ -19,10 +19,12 @@ Stage bookkeeping is driver-side file I/O: row counts come from the parquet
 footers the stage's own write left, and the metrics rows are appended as one
 pyarrow-written file per run, so Spark jobs run only the stages' own work.
 
-Storage is parquet-directory-based. On a production cluster the same calls
-target Iceberg tables (``writeTo(...).using("iceberg")``); the runtime here
-has no Iceberg jar, so the ``sources.catalog`` layer keeps the same
-write-once/marker discipline over plain parquet.
+Storage is parquet-directory-based: stage tables are plain parquet
+directories, and the write-once/marker discipline is ``_Checkpointer``'s
+own (a stage's marker is written only after its table). The pipeline does
+not go through the ``sources.catalog`` layer. On a production cluster the
+stage tables would be Iceberg tables (``writeTo(...).using("iceberg")``);
+the runtime here has no Iceberg jar.
 """
 
 from __future__ import annotations

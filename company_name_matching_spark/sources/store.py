@@ -12,8 +12,12 @@ Two reasons this is the engine-wide policy:
    (Iceberg/parquet) anyway — checkpoint/resume depends on it. Using the
    same mechanism for intra-run reuse keeps one code path.
 
-Temp outputs live under a per-session scratch dir and are removed when the
-SparkSession's JVM exits (they sit in java.io.tmpdir-style scratch space).
+Temp outputs live under a per-process scratch dir (on the RAM-backed
+``/dev/shm`` when the host has one) that a Python ``atexit`` hook removes
+when the driver process exits.
+
+:func:`spread` is the one pre-fan-out repartition every candidate generator
+uses.
 """
 
 from __future__ import annotations
@@ -68,22 +72,27 @@ def _written_rows(df: DataFrame) -> tuple[int, list[dict]]:
     return sum(p["rows"] for p in parts), parts
 
 
-def fanout_repartition(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to the session shuffle width — but ONLY when
-    the current scan is narrower (guide §2.5 input skew: repartition right
-    after a too-few-splits read, before the work).
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin repartition to ``spark.sql.shuffle.partitions``: the
+    spread a small table gets right before it fans out into a much larger
+    row set (pair expansion, candidate self-join probe).
 
-    For a MATERIALIZED (parquet-backed) table that is about to fan out into
-    a much larger row set (candidate self-join probe, pair expansion), a
-    small input is the silent serializer: a few-MB parquet barrier comes
-    back as 1-2 splits, the build side of the following join broadcasts,
-    and the multi-million-row join output plus its map-side partial
-    aggregation all run in those 1-2 tasks (measured on the sf0.1 part
-    PPJoin: 14.3 s serial vs 2.6 s repartitioned for the identical 18M-row
-    candidate join). At scale the input arrives with >= width splits and
-    this is a no-op — no unconditional shuffle is introduced.
+    A small input is the silent serializer there. An aggregated key or
+    block table is a handful of rows whose exchange AQE coalesces to 1-2
+    partitions, and a few-MB parquet barrier reads back as 1-2 splits whose
+    join partner broadcasts. Joins and explodes PRESERVE partitioning, so
+    the multi-million-row output and the map-side partial aggregation
+    after it would all run in those 1-2 tasks (measured on the sf0.1 part
+    PPJoin: 14.3 s serial vs 2.6 s spread for the identical 18M-row
+    candidate join). AQE never coalesces a repartition by number, and the
+    spread shuffles only the small input's rows, never the fan-out.
+
+    Unconditional on purpose: the partition count of an aggregated frame
+    is known only after its job runs (asking for it launches one and
+    reports the post-AQE width), so a "spread only when narrower" check
+    would cost a job and answer wrongly. An input already at shuffle width
+    pays one round-robin exchange of its rows.
     """
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if df.rdd.getNumPartitions() >= n_part:
-        return df
-    return df.repartition(n_part)
+    return df.repartition(
+        int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    )

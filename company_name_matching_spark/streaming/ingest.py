@@ -135,7 +135,8 @@ class IncrementalLinker:
         # and filter_blocks counts rows — duplicated rows would inflate a
         # block past the hot cap and silently drop legitimate pairs
         matched = blocking.filter_blocks(
-            matched.select("block_key", "record_id").dropDuplicates(), self.cfg
+            matched.select("block_key", "record_id").dropDuplicates(),
+            self.cfg.max_block_size,
         )
         pairs = (
             batch_blocks.select("block_key", "record_id").alias("l")

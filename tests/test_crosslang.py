@@ -38,7 +38,9 @@ def test_token_channel_blocks_reordered_brand(spark):
     )
     names = normalize.normalize_mentions(df, "company_id", "name")
     cfg = blocking.BlockingConfig(channels=("token",))
-    blocks = blocking.filter_blocks(blocking.generate_blocks(names, cfg), cfg)
+    blocks = blocking.filter_blocks(
+        blocking.generate_blocks(names, cfg), cfg.max_block_size
+    )
     shared = (
         blocks.groupBy("block_key")
         .agg(F.count(F.lit(1)).alias("n"))

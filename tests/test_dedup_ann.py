@@ -473,6 +473,27 @@ def test_new_channels_degenerate_inputs(spark):
     assert lm_blank == {3}  # zero-bigram docs drop; real doc scored
 
 
+def test_hot_bucket_cap_on_identical_population(spark, monkeypatch):
+    """N identical documents (vectors) share every SimHash (sign-LSH)
+    bucket: a cap below N drops those buckets and every pair with them, a
+    cap of N keeps all C(N,2) pairs."""
+    n = 8
+    docs = spark.createDataFrame(
+        [(i, "same boilerplate text") for i in range(n)], "doc_id int, text string"
+    )
+    vecs = spark.createDataFrame(
+        [(i, [1.0, 0.5, -0.25, 2.0]) for i in range(n)],
+        "vec_id long, embedding array<double>",
+    )
+    for cap, want in ((n - 1, 0), (n, n * (n - 1) // 2)):
+        monkeypatch.setattr(dedup, "MAX_BUCKET_SIZE", cap)
+        assert dedup.simhash_pairs(docs).count() == want
+        lsh = dedup.embedding_neardup_pairs_lsh(
+            vecs, dim=4, n_planes=4, n_tables=2
+        )
+        assert lsh.count() == want
+
+
 def test_winnow_fingerprint_twins_agree_on_blank_docs(spark, tmp_path):
     """Spark entry vs DuckDB twin on a corpus CONTAINING blank docs — the
     degenerate shape the blank-doc hardening must keep cross-engine exact

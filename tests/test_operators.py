@@ -84,7 +84,9 @@ def test_blocking_variants_share_block(spark):
 def test_hot_block_cap_drops_oversized(spark):
     _, names = _names(spark, 40, 3)
     cfg = blocking.BlockingConfig(max_block_size=2)
-    blocks = blocking.filter_blocks(blocking.generate_blocks(names, cfg), cfg)
+    blocks = blocking.filter_blocks(
+        blocking.generate_blocks(names, cfg), cfg.max_block_size
+    )
     sizes = blocks.groupBy("block_key").count()
     assert sizes.agg(F.max("count")).collect()[0][0] <= 2
 
@@ -225,7 +227,9 @@ def test_candidate_pairs_equals_naive_self_join(spark):
         (r["left_id"], r["right_id"])
         for r in blocking.candidate_pairs(names, cfg).collect()
     }
-    blocks = blocking.filter_blocks(blocking.generate_blocks(names, cfg), cfg)
+    blocks = blocking.filter_blocks(
+        blocking.generate_blocks(names, cfg), cfg.max_block_size
+    )
     l, r = blocks.alias("l"), blocks.alias("r")
     naive = {
         (row["left_id"], row["right_id"])
@@ -350,16 +354,15 @@ def test_adaptive_block_cap_tracks_distribution(spark):
     static_keys = {
         r["block_key"]
         for r in blocking.filter_blocks(
-            blocks, blocking.BlockingConfig()
+            blocks, blocking.BlockingConfig().max_block_size
         ).select("block_key").distinct().collect()
     }
     assert static_keys == {f"k:body{b}" for b in range(50)}
     # the cap is inclusive: at 300 the large block survives, 5000 does not
     raised = {
         r["block_key"]
-        for r in blocking.filter_blocks(
-            blocks, blocking.BlockingConfig(max_block_size=300)
-        ).select("block_key").distinct().collect()
+        for r in blocking.filter_blocks(blocks, 300)
+        .select("block_key").distinct().collect()
     }
     assert raised == static_keys | {"k:organic"}
 

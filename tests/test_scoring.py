@@ -16,11 +16,15 @@ from company_name_matching_spark.sources import fixtures, store
 _PYTHON_NODE = re.compile(r"\b\w*(?:Python|InPandas|InArrow)\b")
 
 
+def _executed_plan(df) -> str:
+    """``df``'s executed (final adaptive) plan, after running it."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().finalPhysicalPlan().toString()
+
+
 def _python_nodes(df) -> list[str]:
     """Python-running nodes of ``df``'s executed (final adaptive) plan."""
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().finalPhysicalPlan()
-    return _PYTHON_NODE.findall(plan.toString())
+    return _PYTHON_NODE.findall(_executed_plan(df))
 
 
 def _jobs_in(spark, group: str, fn):
@@ -87,6 +91,14 @@ def test_score_pairs_is_lazy_with_one_python_pass(spark, names_pairs):
     )
     assert jobs == []
     assert _python_nodes(scored) == []
+
+
+def test_score_pairs_plans_no_sort_aggregate(spark, names_pairs):
+    """The distinct-key table deduplicates the key string alone: no
+    aggregate of the plan falls back to a sorted first(tokens)."""
+    names, pairs = names_pairs
+    scored = scoring.score_pairs(names, pairs, scoring.build_idf(names))
+    assert "SortAggregate" not in _executed_plan(scored)
 
 
 def test_build_idf_takes_a_known_row_count(spark, names_pairs):

@@ -174,7 +174,7 @@ def test_embedding_lsh_bucket_plan(spark, monkeypatch):
     )
     buckets = seen["emb_lsh_buckets"]
     assert_staged_explodes(buckets)
-    assert buckets.where(F.col("bucket").isNull()).count() == 0
+    assert buckets.where(F.col("block_key").isNull()).count() == 0
     assert buckets.count() == 20 * 6
 
 
