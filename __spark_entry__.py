@@ -69,14 +69,11 @@ def _norm_part_names(spark, sf_dir):
     (features per pair side, pred+gold, id maps), and every branch
     re-evaluated the whole ArrowEvalPython normalize subtree — the
     er_vmeasure plan carried ELEVEN copies of the kernel. Materializing
-    runs the kernel once; the small parquet read replaces every re-eval.
-    The input is spread to the cluster width first so the kernel is not
-    serialized by the single-split part scan."""
+    runs the kernel once; the small parquet read replaces every re-eval."""
     from company_name_matching_spark.operators import normalize
-    from company_name_matching_spark.sources.store import materialize
+    from company_name_matching_spark.sources.store import materialize, spread_to_cores
 
-    p = _t(spark, sf_dir, "part")
-    p = p.repartition(spark.sparkContext.defaultParallelism)
+    p = spread_to_cores(_t(spark, sf_dir, "part"))
     return materialize(
         normalize.normalize_mentions(
             p.select(F.col("p_partkey").cast("string").alias("pid"),
@@ -409,15 +406,12 @@ def dup_group_names(spark, sf_dir):
         group_original_names,
     )
 
-    from company_name_matching_spark.sources.store import materialize
+    from company_name_matching_spark.sources.store import materialize, spread_to_cores
 
-    # barrier (r6): the salted two-phase grouping and the size agg
-    # reference this frame from four branches, and each re-evaluated the
-    # clean_name ArrowEvalPython subtree (plan showed 4 copies) — run the
-    # kernel once and let every branch read the parquet scratch instead
+    # the salted two-phase grouping and the size agg read this frame from
+    # four branches (the plan showed 4 clean_name copies without the barrier)
     p = materialize(
-        _t(spark, sf_dir, "part")
-        .repartition(spark.sparkContext.defaultParallelism)
+        spread_to_cores(_t(spark, sf_dir, "part"))
         .select(
             clean_name_udf("p_name").alias("norm_key"),
             F.col("p_name").alias("name"),

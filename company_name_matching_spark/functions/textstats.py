@@ -239,15 +239,13 @@ def winnow_fingerprint_table(docs, id_col: str = "doc_id",
     differ per engine, so every doc in one near-dup comparison must use
     one engine (pair-set-equality pytest covers both).
     """
-    from company_name_matching_spark.sources.store import materialize
+    from company_name_matching_spark.sources.store import materialize, spread_to_cores
 
     if hash not in ("md5", "arrow"):
         raise ValueError(f"unknown winnow gram hash {hash!r}")
 
     canon = canon_text(F.col(text_col))
-    # small parquet inputs arrive as one split; spread the CPU-bound
-    # gram-hash stage across the cluster first (same move as minhash_pairs)
-    docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    docs = spread_to_cores(docs)
     extras = [F.col(c) for c in extra_cols]
     s1 = materialize(
         docs.select(F.col(id_col), *extras, canon.alias("_ct")),
@@ -438,10 +436,10 @@ def char_lm_scores(docs, id_col: str = "doc_id", text_col: str = "text",
     STAGED canon column (HOF lambdas re-evaluate inline subexpressions per
     element).
     """
-    from company_name_matching_spark.sources.store import materialize
+    from company_name_matching_spark.sources.store import materialize, spread_to_cores
 
     canon = canon_text(F.col(text_col))
-    docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    docs = spread_to_cores(docs)
     s1 = materialize(
         docs.select(F.col(id_col), canon.alias("_ct")), "charlm_canon"
     )
@@ -475,18 +473,15 @@ def char_lm_scores(docs, id_col: str = "doc_id", text_col: str = "text",
         .distinct()
         .count()
     )
-    model = materialize(
-        bg_counts.join(ctx_counts, "c1").select(
-            "bg",
-            F.round(
-                -F.log2(
-                    (F.col("c_bg") + F.lit(alpha))
-                    / (F.col("c_ctx") + F.lit(alpha * n_chars))
-                ),
-                6,
-            ).alias("bits"),
-        ),
-        "charlm_model",
+    model = bg_counts.join(ctx_counts, "c1").select(
+        "bg",
+        F.round(
+            -F.log2(
+                (F.col("c_bg") + F.lit(alpha))
+                / (F.col("c_ctx") + F.lit(alpha * n_chars))
+            ),
+            6,
+        ).alias("bits"),
     )
     # Join the model on the per-doc DISTINCT-bigram table and weight by
     # cnt. Decimal(30,6) * integer count is exact, so sum(cnt * bits)

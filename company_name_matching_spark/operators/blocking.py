@@ -369,7 +369,7 @@ def _pair_expand(df: DataFrame, ids_col: str, left: str, right: str) -> DataFram
             F.col(ids_col), F.col("_i") + F.lit(2), F.size(ids_col)
         ).alias("_rest"),
     )
-    return anchors.select(left, F.explode("_rest").alias(right))
+    return explode_staged(anchors, "_rest", right, left)
 
 
 def _block_pairs(blocks: DataFrame, left: str, right: str) -> DataFrame:
@@ -402,10 +402,9 @@ def candidate_pairs_record_level(
     makes left < right by construction.
     """
     cfg = cfg or BlockingConfig()
-    # materialize the generated blocks once: filter_blocks consumes them
-    # twice (size aggregation + keep-join), and without a barrier both
-    # consumers would recompute the MinHash signature expressions — the
-    # expensive narrow stage (measured +80% on the pairs stage)
+    # read twice by filter_blocks (size aggregation + keep-join); without
+    # the barrier the MinHash stage ran twice (measured +80% on the pairs
+    # stage)
     blocks = filter_blocks(
         materialize(generate_blocks(names, cfg), "blocks"), cfg.max_block_size
     )
@@ -522,31 +521,21 @@ def candidate_pairs(
     return cross.unionByName(within)
 
 
-def pair_block_weights(
-    blocks: DataFrame, cfg: BlockingConfig | None = None
-) -> DataFrame:
+def pair_block_weights(blocks: DataFrame) -> DataFrame:
     """blocks(record_id, block_key) → (left_id, right_id, weight) where
     weight = CBS, the number of blocks the pair co-occurs in (Papadakis
     et al., "Comparison-Based Blocking" weighting). The per-block pair
     expansion is the same fused collect_set shape as
     :func:`candidate_pairs_record_level`; the weight falls out of the
-    pair-dedup aggregation that plan already pays — CBS is free.
-
-    Pass ``cfg`` to apply :func:`filter_blocks` first (size floor + hot-
-    block cap); None runs exact (every block participates), the oracle
-    configuration."""
-    if cfg is not None:
-        blocks = filter_blocks(
-            materialize(blocks, "mb_blocks"), cfg.max_block_size
-        )
+    pair-dedup aggregation that plan already pays — CBS is free. Every
+    block participates: a caller that wants the hot-block cap applies
+    :func:`filter_blocks` first."""
     return _block_pairs(blocks, "left_id", "right_id").groupBy(
         "left_id", "right_id"
     ).agg(F.count(F.lit(1)).alias("weight"))
 
 
-def metablock_prune(
-    blocks: DataFrame, cfg: BlockingConfig | None = None
-) -> DataFrame:
+def metablock_prune(blocks: DataFrame) -> DataFrame:
     """Meta-blocking with Weighted Node Pruning (Papadakis et al., TKDE'14):
     keep a candidate pair iff its co-occurrence weight is ≥ the mean
     incident-pair weight of AT LEAST ONE of its two records. Redundancy-
@@ -565,7 +554,7 @@ def metablock_prune(
     Everything is key-partitioned; per-node state is two longs.
     Output: (left_id, right_id, weight) — the surviving comparisons.
     """
-    w = materialize(pair_block_weights(blocks, cfg), "mb_weights")
+    w = materialize(pair_block_weights(blocks), "mb_weights")
     ends = w.select(F.col("left_id").alias("_id"), "weight").unionByName(
         w.select(F.col("right_id").alias("_id"), "weight")
     )

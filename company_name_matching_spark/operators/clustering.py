@@ -15,8 +15,7 @@ is the scale path that generalizes it to fuzzy edges.
 Each round materializes the edge set to a parquet barrier
 (:func:`company_name_matching_spark.sources.store.materialize`): truncates the join
 lineage (plan growth is the classic iterative-Spark failure mode) and gives a
-cheap convergence checksum. (``localCheckpoint`` was measured slower — the
-InMemoryRelation scan contends at high local parallelism.)
+cheap convergence checksum.
 """
 
 from __future__ import annotations
@@ -141,10 +140,8 @@ def connected_components(
     prev_sig = None
     rounds = 0
     for rounds in range(1, max_iterations + 1):
-        # materialize each round through parquet: truncates the iterative
-        # join lineage AND avoids the in-memory cache scan contention at
-        # high thread counts (see sources/store.py). The single dedup here
-        # replaces per-star dedups (one shuffle per round instead of three).
+        # the single dedup here replaces per-star dedups (one shuffle per
+        # round instead of three)
         e = materialize(
             _small_star(_large_star(e)).dropDuplicates(), "cc_round"
         )
@@ -332,10 +329,12 @@ def pivot_clusters(
     Each round is two hash joins + one aggregation, materialized
     through the parquet barrier (same iterative-lineage rule as
     :func:`connected_components`); the only driver state is the per-round
-    count used for loop control. Raises if the graph does not drain
-    within ``max_rounds`` (a silent partial clustering would corrupt
-    downstream survivorship): on deterministic data the round count is
-    deterministic, so callers pin a measured bound.
+    footer count of the active set, used for loop control. The labels are
+    the lazy union of the per-round assignment barriers. Raises if the
+    graph does not drain within ``max_rounds`` (a silent partial
+    clustering would corrupt downstream survivorship): on deterministic
+    data the round count is deterministic, so callers pin a measured
+    bound.
 
     Returns (labels(record_id, cluster_id = pivot id), rounds). Nodes
     absent from ``edges`` are the caller's concern (:func:`attach_singletons`).
@@ -346,7 +345,7 @@ def pivot_clusters(
     e = materialize(e, "pivot_edges_in")
     # Size-gated driver replay (the same runtime dispatch
     # connected_components applies): below the gate each distributed round
-    # costs 4 parquet barriers + a count against near-empty shuffles —
+    # costs 3 parquet barriers + a footer read against near-empty shuffles —
     # fixed latency that dwarfs the actual work (measured 8.8 s for 5
     # rounds over 759k sf0.1 edges vs ~1 s on the driver). The replay is
     # the identical round algorithm (pytest-equivalence-enforced), so
@@ -360,10 +359,7 @@ def pivot_clusters(
     )
     if driver is not None:
         return driver
-    sym = materialize(
-        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))),
-        "pivot_edges",
-    )
+    sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     active = materialize(sym.select(F.col("src").alias("node")).dropDuplicates(),
                          "pivot_active")
     spark = edges.sparkSession
@@ -412,7 +408,7 @@ def pivot_clusters(
             raise RuntimeError(
                 f"pivot_clusters: graph not drained after {max_rounds} rounds"
             )
-    return materialize(labels, "pivot_labels"), rounds
+    return labels, rounds
 
 
 def sparsify_edges(
@@ -641,7 +637,8 @@ def cluster_stats(
 
 
 def pivot_matches(
-    matches: DataFrame, names: DataFrame, max_rounds: int = 12
+    matches: DataFrame, names: DataFrame,
+    driver_edge_threshold: int = 1_000_000,
 ) -> tuple[DataFrame, int]:
     """Scored pairs (is_match=true) → pivot-clustered labels — the
     :func:`cluster_matches` counterpart built on :func:`pivot_clusters`
@@ -654,9 +651,11 @@ def pivot_matches(
     guarantee holds on the REP graph: every rep is a direct match-edge
     neighbor of its pivot rep; member records inherit via exact-duplicate
     equivalence. cluster_id is the pivot rep's record_id (deterministic,
-    data-dependent — NOT the component minimum, unlike CC labels)."""
+    data-dependent — NOT the component minimum, unlike CC labels).
+    ``driver_edge_threshold`` is :func:`pivot_clusters`' driver gate."""
     return _contract_exact(
-        matches, names, lambda e: pivot_clusters(e, max_rounds)
+        matches, names,
+        lambda e: pivot_clusters(e, driver_edge_threshold=driver_edge_threshold),
     )
 
 

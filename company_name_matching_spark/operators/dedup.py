@@ -284,9 +284,8 @@ def _ppjoin_exact_jaccard(d: DataFrame, threshold: float, tag: str,
         df_t = it.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
         w = Window.partitionBy("id").orderBy("df", "tok")
         ranked = it.join(df_t, "tok").withColumn("_p", F.row_number().over(w))
-        # materialize: the df-join + rank window feeds BOTH sides of the
-        # candidate self-join AND the verify-feature id pruning below —
-        # three scans of a stored narrow table instead of three recomputes
+        # read by both sides of the candidate self-join and the
+        # verify-feature id pruning below
         prefix = materialize(
             ranked.where(F.col("_p") <= prefix_len).select(
                 "id", "bk", "tok", "n", "_p"
@@ -469,14 +468,10 @@ def minhash_pairs(
     d = docs.select(F.col(id_col).alias("id"), canon.alias("ctext"))
     # Stage 1: one signature scan per document, materialized (documents can
     # be long — recomputing the shingle scan per band is catastrophic).
-    # Small parquet inputs arrive as 1 split; spread the CPU-bound signature
-    # computation across the cluster first.
-    d = d.repartition(d.sparkSession.sparkContext.defaultParallelism)
-    from company_name_matching_spark.sources.store import materialize
+    from company_name_matching_spark.sources.store import materialize, spread_to_cores
 
-    # parquet barrier, not localCheckpoint: executor-memory-resident blocks
-    # are non-replayable on executor loss on a real cluster (and the
-    # in-memory scan anti-scales at high local thread counts; see store.py).
+    d = spread_to_cores(d)
+
     # The JVM computes the trigram-hash array once (one codegen'd expression
     # feeding the UDF) and the Arrow kernel derives all bands·rows
     # permutation minima from it in numpy, so no staged hash-array barrier
@@ -494,8 +489,7 @@ def minhash_pairs(
         F.col("id").alias("record_id"),
         F.explode(blocking.band_keys_from_sig(F.col("sig"), cfg)).alias("block_key"),
     )
-    # materialize: the size-agg + keep-join of filter_blocks feeds both
-    # sides of the candidate self-join AND the verify-id pruning
+    # read by both sides of the candidate self-join and the verify-id pruning
     bands = materialize(
         blocking.filter_blocks(bands, cfg.max_block_size), "mh_bands"
     )
@@ -575,8 +569,8 @@ def simhash_pairs(
     n_bands = next(b for b in (4, 8, 16, 32, 64) if b > max_hamming)
     from company_name_matching_spark.sources.store import materialize
 
-    # one UDF pass: the signature table feeds the cap's size-agg, the keep
-    # join, and both sides of the pair self-join
+    # read by the cap's size-agg, the keep join and both sides of the pair
+    # self-join
     d = materialize(
         docs.select(
             F.col(id_col).alias("id"), _simhash_udf(F.col(text_col)).alias("sh")
@@ -692,9 +686,7 @@ def embedding_neardup_pairs_lsh(
     )
     from company_name_matching_spark.sources.store import materialize
 
-    # materialize: the bucketed table feeds the cap's size-agg plus both
-    # join sides — without a barrier every consumer recomputes the
-    # n_tables×n_planes dot products per vector. The cap guards the
+    # read by the cap's size-agg and both join sides. The cap guards the
     # degenerate case the expectation bound ignores (e.g. zero vectors all
     # landing in one all-ones sign bucket → O(n²) on that bucket).
     b = materialize(

@@ -44,7 +44,6 @@ def pagerank(
     dst_col: str = "dst",
     iterations: int = 3,
     damping: float = 0.85,
-    materialize_rounds: bool = True,
 ) -> DataFrame:
     """(id, rank) over the distinct nodes of ``edges`` after
     ``iterations`` damped power-iteration rounds from a uniform start.
@@ -61,18 +60,15 @@ def pagerank(
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()
-    if materialize_rounds:
-        e = materialize(e, "pagerank_edges")
+    e = materialize(e, "pagerank_edges")
     nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
     )
-    if materialize_rounds:
-        nodes = materialize(nodes, "pagerank_nodes")
+    nodes = materialize(nodes, "pagerank_nodes")
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outd"))
-    if materialize_rounds:
-        deg = materialize(deg, "pagerank_deg")
+    deg = materialize(deg, "pagerank_deg")
 
     n_nodes = nodes.count()  # bounded scalar (node-dim cardinality)
     # teleport term computed ONCE driver-side; IEEE division identical
@@ -108,6 +104,5 @@ def pagerank(
                 _SCALE,
             ).alias("rank"),
         )
-        if materialize_rounds:
-            ranks = materialize(ranks, f"pagerank_r{i + 1}")
+        ranks = materialize(ranks, f"pagerank_r{i + 1}")
     return ranks

@@ -104,8 +104,7 @@ def validate_mentions(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def normalize_mentions(
-    df: DataFrame, id_col: str, text_col: str, keep_cols: tuple[str, ...] = (),
-    id_domain: str = "",
+    df: DataFrame, id_col: str, text_col: str, id_domain: str = "",
 ) -> DataFrame:
     """Generic mention normalization: any (id, text) table → normalized
     records with all scoring-side features. One shuffle-free map.
@@ -138,7 +137,6 @@ def normalize_mentions(
         df.select(
             rid.alias("record_id"),
             F.col(id_col).alias("source_id"),
-            *keep_cols,
             F.col(text_col).alias("name"),
             F.col("_norm.cleaned").alias("cleaned"),
             F.col("_norm.norm_key").alias("norm_key"),

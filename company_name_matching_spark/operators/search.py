@@ -121,21 +121,18 @@ def search_topk(
         materialize,
     )
 
-    # materialize both normalized tables: c and q fan into blocking, IDF,
-    # scoring, and the output joins — without a barrier the corpus-wide
-    # normalization pandas UDF re-executes for every downstream action
+    # the normalized c and q fan into blocking, IDF, scoring and the output
+    # joins
     c = materialize(
         normalize.normalize_mentions(corpus, corpus_id, corpus_text,
                                      id_domain="c:"),
         "search_corpus",
     )
-    q = materialize(
-        normalize.normalize_mentions(queries, query_id, query_text,
-                                     id_domain="q:"),
-        "search_queries",
-    )
+    q = normalize.normalize_mentions(queries, query_id, query_text,
+                                     id_domain="q:")
     if cfg.query_aliases:
-        # query-side alias layer (JVM regexp chain; Java regex supports \b)
+        # query-side alias layer (JVM regexp chain; Java regex supports \b),
+        # applied below the one query barrier
         mk = F.col("match_key")
         for pat, rep in cfg.query_aliases:
             mk = F.regexp_replace(mk, pat, rep)
@@ -144,10 +141,9 @@ def search_topk(
             q.withColumn("match_key", mk)
             .withColumn("tokens", F.split("match_key", " "))
         )
-        q = materialize(q, "search_queries_aliased")
+    q = materialize(q, "search_queries")
 
-    # barrier before filter_blocks: its size-agg + keep-join consume the
-    # blocks twice, and the MinHash signature generation must not run twice
+    # read twice by filter_blocks (size-agg + keep-join)
     cb = blocking.filter_blocks(
         materialize(blocking.generate_blocks(c, cfg.blocking), "search_cblocks"),
         cfg.blocking.max_block_size, min_size=1,

@@ -53,8 +53,9 @@ class PipelineConfig:
     scoring: scoring.ScoringConfig = field(default_factory=scoring.ScoringConfig)
     run_id: str = "run-0"
     max_cc_iterations: int = 15
-    # size gate for the driver union-find CC fast path (0 = always iterate
-    # distributed; see clustering.connected_components)
+    # size gate of the driver clustering path, for both cluster methods:
+    # union-find for "cc", the pivot replay for "pivot" (0 = always iterate
+    # distributed; see clustering.connected_components / pivot_clusters)
     cc_driver_edge_threshold: int = 1_000_000
     # "cc" = transitive connected components (reference semantics);
     # "pivot" = ACN pivot clustering — star clusters, no chain over-merge
@@ -138,12 +139,8 @@ class _Checkpointer:
                 reader = reader.schema(schema)
             df = reader.parquet(data)
         else:
-            # a computed stage goes through the parquet barrier at its
-            # checkpoint location, or in scratch when there is none: the
-            # stage output is consumed by downstream stages
-            # (without a barrier every consumer recomputes the lineage), and
-            # .persist() is NOT a substitute — the in-memory cache scan
-            # contends badly at high thread counts (see sources/store.py)
+            # a computed stage is written at its checkpoint location, or in
+            # scratch when there is none
             out = fn()
             df, facts = out if isinstance(out, tuple) else (out, {})
             df = store.materialize(df, stage, path=data)
@@ -210,7 +207,9 @@ def run_pipeline(
 
     def _cluster():
         if cfg.cluster_method == "pivot":
-            clusters, rounds = clustering.pivot_matches(matches, names)
+            clusters, rounds = clustering.pivot_matches(
+                matches, names, cfg.cc_driver_edge_threshold
+            )
         else:
             clusters, rounds = clustering.cluster_matches(
                 matches, names, cfg.max_cc_iterations,

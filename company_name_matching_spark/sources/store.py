@@ -1,6 +1,7 @@
-"""Materialization barrier: write-through-parquet instead of .persist().
+"""Placement: the parquet barrier and the two spreads.
 
-Two reasons this is the engine-wide policy:
+:func:`materialize` is the engine's barrier, a parquet write and read-back
+instead of ``.persist()``, for two reasons:
 
 1. **Scaling.** Spark's in-memory columnar cache (InMemoryRelation) scan
    contends badly at high local thread counts — measured on this workload:
@@ -12,12 +13,13 @@ Two reasons this is the engine-wide policy:
    (Iceberg/parquet) anyway — checkpoint/resume depends on it. Using the
    same mechanism for intra-run reuse keeps one code path.
 
+Where a barrier goes is one rule, stated on :func:`materialize`. Where a
+frame is repartitioned is two: :func:`spread` before a fan-out, and
+:func:`spread_to_cores` before a CPU-bound kernel.
+
 Temp outputs live under a per-process scratch dir (on the RAM-backed
 ``/dev/shm`` when the host has one) that a Python ``atexit`` hook removes
 when the driver process exits.
-
-:func:`spread` is the one pre-fan-out repartition every candidate generator
-uses.
 """
 
 from __future__ import annotations
@@ -54,7 +56,23 @@ def materialize(
 ) -> DataFrame:
     """Hard materialization barrier: parquet write + read-back, at ``path``
     (a checkpoint location) or under the session scratch dir. The read-back
-    takes ``df``'s schema, so Spark runs no job to infer it from the files."""
+    takes ``df``'s schema, so Spark runs no job to infer it from the files.
+
+    The barrier rule. A barrier costs a job plus a write and a read of its
+    rows, so it is placed only where one of these holds:
+
+    1. it is a pipeline stage's durable output;
+    2. more than one consumer reads a frame that a Python kernel or
+       interpreted array functions compute;
+    3. more than one consumer reads the output of a join or an aggregation;
+    4. it stages the input of array functions whose lambdas would otherwise
+       re-evaluate it per element;
+    5. it holds an iteration's state (it cuts the per-round lineage);
+    6. a driver decision reads its footer row count (:func:`_written_rows`).
+
+    A function materializes frames it computes, never the frame it was
+    given. A projection, filter or union over a barrier stays lazy.
+    """
     path = path or f"{_scratch_dir()}/{label}-{next(_counter)}"
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.schema(df.schema).parquet(path)
@@ -96,3 +114,16 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(
         int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     )
+
+
+def spread_to_cores(df: DataFrame) -> DataFrame:
+    """Round-robin repartition to ``defaultParallelism`` (the core count):
+    the spread a small scan gets right before a CPU-bound kernel (a Python
+    UDF, or interpreted array functions over long documents), which would
+    otherwise run in the scan's one or two splits.
+
+    The core count, not :func:`spread`'s shuffle width: each core runs one
+    Python worker, and a kernel task pays a per-task cost (a worker round
+    trip, Arrow set-up) that argues against the shuffle width's 2× tasks.
+    """
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)

@@ -79,7 +79,6 @@ class IncrementalLinker:
 
         from company_name_matching_spark.sources.store import materialize
 
-        # parquet barrier (not localCheckpoint): replayable on executor loss
         batch_names = materialize(batch_names, "ingest_batch_names")
 
         # STORE appends cover only records not yet ingested (O(new data),

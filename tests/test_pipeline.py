@@ -287,6 +287,38 @@ def test_pipeline_pivot_method_and_golden(spark):
     assert all(r.canonical_name for r in g)
 
 
+def test_pipeline_pivot_honours_driver_gate(spark, monkeypatch):
+    """cc_driver_edge_threshold=0 sends pivot down the distributed path,
+    with the labels and round count of the driver replay."""
+    from company_name_matching_spark.operators import clustering, scoring
+
+    # typo pages at a 0.8 threshold give fuzzy edges between match keys
+    pages = fixtures.pages_dataframe(
+        spark, n_companies=30, per_company=3, typos_per_company=2
+    )
+    loose = scoring.ScoringConfig(threshold=0.8)
+
+    def labels(res):
+        return sorted((r.record_id, r.cluster_id) for r in res.clusters.collect())
+
+    driver = run_pipeline(
+        spark, pages, cfg=PipelineConfig(cluster_method="pivot", scoring=loose)
+    )
+    want = labels(driver)
+
+    def no_replay(*args, **kwargs):
+        raise AssertionError("the driver pivot replay ran")
+
+    monkeypatch.setattr(clustering, "_driver_pivot_rounds", no_replay)
+    res = run_pipeline(
+        spark, pages,
+        cfg=PipelineConfig(cluster_method="pivot", scoring=loose,
+                           cc_driver_edge_threshold=0),
+    )
+    assert res.cc_rounds == driver.cc_rounds > 0
+    assert labels(res) == want
+
+
 def test_pipeline_rejects_unknown_cluster_method(spark, tmp_path):
     """The config is rejected before any stage runs or checkpoints."""
     import pytest as _pytest

@@ -1,7 +1,7 @@
-"""One placement rule for candidate generators: every pre-fan-out spread goes
-through ``store.spread`` and every hot-bucket cap through
-``blocking.filter_blocks``. The source scans below need no Spark, so a
-re-inlined spread or cap fails here before any plan runs."""
+"""One placement rule: every repartition goes through ``store`` (``spread``
+before a fan-out, ``spread_to_cores`` before a kernel) and every hot-bucket
+cap through ``blocking.filter_blocks``. The source scans below need no
+Spark, so a re-inlined spread or cap fails here before any plan runs."""
 
 import ast
 from pathlib import Path
@@ -51,4 +51,29 @@ def test_spread_reaches_shuffle_width(spark):
     out = store.spread(df)
     width = int(spark.conf.get(SHUFFLE_WIDTH))
     assert out.rdd.getNumPartitions() == width
+    assert sorted(r.id for r in out.collect()) == list(range(50))
+
+
+def test_repartition_only_in_store():
+    """Every repartition goes through ``store`` (``spread`` before a
+    fan-out, ``spread_to_cores`` before a kernel); ``fixtures`` builds
+    multi-partition test inputs."""
+    callers = {
+        path
+        for path, tree in _sources().items()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "repartition"
+    }
+    assert callers == {
+        "company_name_matching_spark/sources/store.py",
+        "company_name_matching_spark/sources/fixtures.py",
+    }
+
+
+def test_spread_to_cores_reaches_core_count(spark):
+    df = spark.range(0, 50, numPartitions=1)
+    out = store.spread_to_cores(df)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     assert sorted(r.id for r in out.collect()) == list(range(50))
